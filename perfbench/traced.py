@@ -1,9 +1,9 @@
 """The traced run (--trace 1): per-layer metrics and tracing overhead.
 
-1. Untraced: the usual set-ups, cold operation and one warm cycle of the
-   chosen workload, in a session without the event log.
-2. Traced: a new session with the uncompressed Spark event log on; the same
-   warm cycle again, every operation inside a span, so the overhead of
+1. Untraced: the usual set-ups and cold pass, then a session restart and
+   ``--seconds`` of warm cycles without the event log.
+2. Traced: a new session with the uncompressed Spark event log on; as many
+   warm cycles again, every operation inside a span, so the overhead of
    tracing is the ratio of the two warm medians.
 3. Layer sweep: every layer of every workload called in pipeline order and
    in sequence, one span each, through the layers' public functions.  A
@@ -229,7 +229,10 @@ def traced_run(sess, wl, args):
     setups = measure_setup(sess, wl)
     spark = sess.spark
     ops += wl.cold(spark)
-    untraced, _ = loop(spark, wl, args.seconds)
+    # both measured loops start right after a session restart, so they
+    # differ only in tracing
+    sess.stop()
+    untraced, _ = loop(sess.start(), wl, args.seconds)
     ops += untraced
     sess.stop()
 
