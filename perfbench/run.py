@@ -1,8 +1,8 @@
 """kgforge benchmark: one workload, one seed, one result line.
 
-    python3 perfbench/run.py --workload build --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload build --seed 1 --seconds 12 --trace 0
 
-Run from the root of a kgforge checkout.  Workloads: build, log, serve
+Run from the root of a kgforge checkout.  Workloads: build, serve
 (see perfbench/README.md).  With --trace 0 the last stdout line carries the
 end-to-end metrics; with --trace 1 it carries the per-layer metrics of a
 traced run.  The lines before it report the input properties, the host and
@@ -31,6 +31,10 @@ sys.path.insert(0, ROOT)  # kgforge, from the checkout being measured
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_SETUPS = 3  # set-ups per run; setup_s is their median
+MIN_CYCLES = 2  # warm cycles per measured loop at least; ops_per_s is their median
+# the workloads BENCHMARK.json names; the log workload's layers are measured
+# by the layer sweep of every traced run (traced.py)
+BENCH_WORKLOADS = ("build", "serve")
 
 END_TO_END = {
     "setup_s": "s",
@@ -59,7 +63,7 @@ def host_env(work: str) -> dict:
     checkout."""
     nproc = os.cpu_count() or 1
     mem_gb = _meminfo_kb("MemTotal") / (1 << 20)
-    heap_gb = max(1, min(4, int(mem_gb / 4)))
+    heap_gb = max(1, min(2, int(mem_gb / 4)))
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
@@ -103,21 +107,20 @@ def _children(pid: int) -> list:
     return out
 
 
-def peak_rss_mb() -> float:
-    """Sum of VmHWM over this process and its descendants (Spark driver, JVM,
-    Python workers)."""
-    total, todo = 0, [os.getpid()]
+def peak_rss_by_proc() -> dict:
+    """VmHWM in MB of this process and each of its descendants (Spark
+    driver, JVM, Python workers), keyed by "name:pid"."""
+    out, todo = {}, [os.getpid()]
     while todo:
         pid = todo.pop()
         todo.extend(_children(pid))
         try:
             with open(f"/proc/{pid}/status") as fh:
-                for line in fh:
-                    if line.startswith("VmHWM:"):
-                        total += int(line.split()[1])
-        except OSError:
-            pass
-    return total / 1024
+                fields = dict(line.split(":", 1) for line in fh if ":" in line)
+            out[f"{fields['Name'].strip()}:{pid}"] = int(fields["VmHWM"].split()[0]) / 1024
+        except (OSError, KeyError):
+            pass  # exited, or a kernel thread without VmHWM
+    return out
 
 
 class Sessions:
@@ -132,7 +135,8 @@ class Sessions:
         tmp = os.path.join(self.work, "tmp")
         extra = {
             # no hsperfdata file under /tmp: a run writes only in its checkout
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+            f" -Xms{os.environ['KGFORGE_DRIVER_MEM']} -XX:+AlwaysPreTouch",
             "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
             "spark.eventLog.enabled": "true" if eventlog else "false",
         }
@@ -196,16 +200,21 @@ def measure_setup(sess: Sessions, wl) -> list:
     return walls
 
 
-def loop(spark, wl, seconds: float, tracer=None, first: int = 0) -> list:
+def loop(
+    spark, wl, seconds: float, tracer=None, first: int = 0, min_cycles: int = MIN_CYCLES
+) -> list:
     """Closed loop, one client: whole cycles back to back, numbered from
-    ``first``, until ``seconds`` of operation time have been spent.  Whole
-    cycles keep the mix of operation kinds fixed, so ops_per_s does not
-    depend on where the loop stopped.  With a tracer, each operation runs
-    in an "op" span."""
+    ``first``, stopping at the cycle boundary nearest to ``seconds`` of
+    operation time, after at least ``min_cycles``.  Whole cycles keep the
+    mix of operation kinds fixed, so ops_per_s does not depend on where the
+    loop stopped.  With a tracer, each operation runs in an "op" span.
+    Returns the operation records and the (operations, seconds) of each
+    cycle."""
     from perfbench.workloads import maybe_span
 
-    ops, spent, i = [], 0.0, first
-    while spent < seconds:
+    ops, cycles, spent, i, last = [], [], 0.0, first, 0.0
+    while len(cycles) < min_cycles or spent + last / 2 < seconds:
+        before, n = spent, len(ops)
         for thunk in wl.cycle(spark, i):
             t = time.perf_counter()
             try:
@@ -216,11 +225,13 @@ def loop(spark, wl, seconds: float, tracer=None, first: int = 0) -> list:
                 rec = {"kind": "error", "wall": time.perf_counter() - t, "ok": False, "rows": 0}
             ops.append(rec)
             spent += rec["wall"]
+        last = spent - before
+        cycles.append((len(ops) - n, last))
         i += 1
-    return ops, spent
+    return ops, cycles
 
 
-def end_to_end(setups, cold, warm, spent, wl, rss) -> dict:
+def end_to_end(setups, cold, warm, cycles, wl, rss) -> dict:
     def walls(kind):
         return [r["wall"] for r in warm if r["kind"] == kind]
 
@@ -233,7 +244,7 @@ def end_to_end(setups, cold, warm, spent, wl, rss) -> dict:
         "read_s_p50": pct(reads, 0.5),
         "read_s_p90": pct(reads, 0.9),
         "merge_s_p50": pct(merges, 0.5),
-        "ops_per_s": len(warm) / spent,
+        "ops_per_s": statistics.median(n / wall for n, wall in cycles),
         "out_bytes_per_in_byte": wl.out_bytes_per_in_byte(),
         "peak_rss_mb": rss,
     }
@@ -241,7 +252,7 @@ def end_to_end(setups, cold, warm, spent, wl, rss) -> dict:
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=["build", "log", "serve"])
+    ap.add_argument("--workload", required=True, choices=list(BENCH_WORKLOADS))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -277,19 +288,25 @@ def main(argv=None) -> int:
             t.append(time.perf_counter())
             spark = sess.spark
             cold = wl.cold(spark)
-            # untimed warm-up cycles: the JIT is still compiling the
-            # workload's paths after the cold pass
-            warmup = [th() for i in range(wl.WARMUP_CYCLES) for th in wl.cycle(spark, i)]
+            warmup = wl.warmup(spark)
             t.append(time.perf_counter())
-            warm, spent = loop(spark, wl, args.seconds, first=wl.WARMUP_CYCLES)
+            warm, cycles = loop(spark, wl, args.seconds, first=wl.WARMUP_CYCLES)
             t.append(time.perf_counter())
             checks = wl.final(spark)
             t.append(time.perf_counter())
             phases = dict(zip(["setup", "cold", "loop", "final"], [b - a for a, b in zip(t, t[1:])]))
-            rss = peak_rss_mb()
-            metrics = end_to_end(setups, cold, warm, spent, wl, rss)
+            rss_by = peak_rss_by_proc()
+            rss = sum(rss_by.values())
+            metrics = end_to_end(setups, cold, warm, cycles, wl, rss)
             units = END_TO_END
             ops = cold + warmup + warm + checks
+            extra = {
+                "rss_mb_by_proc": {k: round(v, 1) for k, v in rss_by.items()},
+                "warm_walls": {
+                    k: [round(r["wall"], 4) for r in warm if r["kind"] == k]
+                    for k in ("run", "read", "merge")
+                },
+            }
     finally:
         if sess is not None:
             sess.close()

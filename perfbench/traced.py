@@ -1,15 +1,19 @@
 """The traced run (--trace 1): per-layer metrics and tracing overhead.
 
-1. Untraced: the usual set-ups and cold pass, then a session restart and
-   ``--seconds`` of warm cycles without the event log.
-2. Traced: a new session with the uncompressed Spark event log on; as many
-   warm cycles again, every operation inside a span, so the overhead of
-   tracing is the ratio of the two warm medians.
-3. Layer sweep: every layer of every workload called in pipeline order and
-   in sequence, one span each, through the layers' public functions.  A
-   traced run of any workload reports every per-layer metric.
+1. Untraced: the usual set-ups, cold pass and warm-up, then a session
+   restart and a quarter of ``--seconds`` of warm cycles without the event
+   log.
+2. Traced: a new session with the uncompressed Spark event log on; half of
+   ``--seconds`` of warm cycles, every operation inside a span.
+3. Layer sweep, in the same session: every layer of every workload called
+   in pipeline order and in sequence, one span each, through the layers'
+   public functions.  A traced run of any workload reports every per-layer
+   metric.
 4. The session stops, the event log is complete, and each span's jobs turn
    into executor counters (eventlog.read_event_log).
+5. Untraced again: a new session and the last quarter of ``--seconds``.
+   The overhead of tracing is the traced warm median over the median of
+   both untraced loops, so that warm-up still in progress cancels out.
 """
 
 from __future__ import annotations
@@ -169,7 +173,7 @@ def sweep_log(spark, tracer: Tracer, wl, out: dict, ops: list) -> None:
     with tracer.span("logs.read"):
         read_apache_log(spark, path).write.format("noop").mode("overwrite").save()
     with tracer.span("log.run_log"):
-        wl.last, rec = wl.run_once(spark, (inp, path), wl.out, "run")
+        _, rec = wl.run_once(spark, (inp, path), wl.out)
     ops.append(rec)
     # parse + canonicalize cost per DISTINCT query, outside Spark
     from urllib.parse import parse_qs, urlsplit
@@ -229,27 +233,24 @@ def traced_run(sess, wl, args):
     setups = measure_setup(sess, wl)
     spark = sess.spark
     ops += wl.cold(spark)
-    # both measured loops start right after a session restart, so they
-    # differ only in tracing
+    ops += wl.warmup(spark)
+    # the traced loop is bracketed by two untraced ones, each right after a
+    # session restart, so that warm-up still in progress cancels out of the
+    # overhead; the three loops take --seconds together, at least a cycle
+    # each
     sess.stop()
-    untraced, _ = loop(sess.start(), wl, args.seconds)
-    ops += untraced
+    before, _ = loop(sess.start(), wl, args.seconds / 4, first=wl.WARMUP_CYCLES, min_cycles=1)
     sess.stop()
 
     spark = sess.start(eventlog=True)
     tracer = Tracer(spark.sparkContext)
     t0 = time.perf_counter()
-    traced, _ = loop(spark, wl, args.seconds, tracer)
-    ops += traced
-    kind = "read" if wl.name == "serve" else "run"
-    ratio = statistics.median(
-        r["wall"] for r in traced if r["kind"] == kind
-    ) / statistics.median(r["wall"] for r in untraced if r["kind"] == kind)
+    traced, _ = loop(
+        spark, wl, args.seconds / 2, tracer, first=wl.WARMUP_CYCLES + 100, min_cycles=1
+    )
 
-    out = {
-        "conf.session_s": statistics.median(s for _, s in setups),
-        "trace.overhead_frac": ratio - 1.0,
-    }
+    out = {"conf.session_s": statistics.median(s for _, s in setups)}
+    sweep_inputs = {}
     for name, sweep in SWEEPS.items():
         other = wl
         if name != wl.name:
@@ -258,10 +259,21 @@ def traced_run(sess, wl, args):
             )
             other.prepare()
         sweep(spark, tracer, other, out, ops)
+        sweep_inputs[name] = other.props
     sess.stop()
-
     (log,) = glob.glob(os.path.join(sess.eventlog_dir, "*"))
     counters = span_counters(tracer, read_event_log(log))
+
+    after, _ = loop(
+        sess.start(), wl, args.seconds / 4, first=wl.WARMUP_CYCLES + 200, min_cycles=1
+    )
+    ops += before + traced + after
+    kind = "read" if wl.name == "serve" else "run"
+
+    def med(recs):
+        return statistics.median(r["wall"] for r in recs if r["kind"] == kind)
+
+    out["trace.overhead_frac"] = med(traced) / med(before + after) - 1.0
     for span in WALL_SPANS:
         w = tracer.walls(span)
         out[span + "_s"] = statistics.median(w) if w else 0.0
@@ -274,5 +286,5 @@ def traced_run(sess, wl, args):
          "end": round(s["end"] - t0, 4), "parent": s["parent"], "group": s["group"]}
         for s in tracer.spans
     ]
-    info = {"span_counters": counters, "spans": spans}
+    info = {"span_counters": counters, "spans": spans, "sweep_inputs": sweep_inputs}
     return out, per_layer_units(), ops, info

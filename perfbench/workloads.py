@@ -1,4 +1,4 @@
-"""The three workloads.  Each one turns a seed into inputs (untimed), adds
+"""The workloads.  Each one turns a seed into inputs (untimed), adds
 its own step to program set-up, and yields operations one at a time; every
 operation is timed from outside through kgforge's public functions and
 checked against the generator's ground truth.
@@ -72,6 +72,13 @@ class Workload:
     def cold(self, spark) -> List[dict]:
         raise NotImplementedError
 
+    def warmup(self, spark) -> List[dict]:
+        """Untimed cycles between the cold pass and the loop: the JIT is
+        still compiling the workload's paths after the cold pass.  A fixed
+        number of cycles, not a time, so that a slower host does not start
+        measuring at an earlier stage of warm-up."""
+        return [th() for i in range(self.WARMUP_CYCLES) for th in self.cycle(spark, i)]
+
     def cycle(self, spark, i: int) -> List[Callable[[], dict]]:
         """The operations of warm cycle ``i``, each a thunk returning its
         record."""
@@ -103,7 +110,8 @@ class Build(Workload):
 
     name = "build"
     N_ROWS = 2000
-    READS, MERGES = 12, 5  # per warm cycle, after its run
+    READS, MERGES = 8, 4  # per warm cycle, after its run
+    WARMUP_CYCLES = 1  # the first warm run is still a third slower than the next ones
 
     def prepare(self) -> None:
         self.n_rows = max(40, int(self.N_ROWS * self.scale))
@@ -197,19 +205,17 @@ def gen_sha(content: str) -> str:
 
 
 class Log(Workload):
-    """pipeline_log.run_log over seeded DBpedia access logs; every run reads
-    a fresh log part so its distinct queries miss the workers' parse memo."""
+    """pipeline_log.run_log over seeded DBpedia access logs, run by the
+    traced run's layer sweep (not a benchmark workload of its own); every
+    part is a fresh log, so its distinct queries miss the workers' parse
+    memo."""
 
     name = "log"
     N_LINES = 5000
-    N_BATCH = 200
-    READS, MERGES = 12, 1  # per warm cycle, after its run
 
     def prepare(self) -> None:
         self.n_lines = max(100, int(self.N_LINES * self.scale))
         self.part = 0
-        self.first = self.next_part(self.n_lines)
-        self.props = dict(self.first[0].props)
         self.out = os.path.join(self.work, "log_out")
 
     def next_part(self, n_lines: int):
@@ -220,42 +226,17 @@ class Log(Workload):
         with open(path, "w", encoding="utf-8") as fh:
             fh.write(inp.text)
         self.part += 1
+        self.props = dict(inp.props)
         return inp, path
 
-    def run_once(self, spark, part, out: str, kind: str):
+    def run_once(self, spark, part, out: str):
+        """run_log over one part; ok when every count equals the plant."""
         from kgforge.pipeline_log import run_log
 
         inp, path = part
         m, wall = timed(run_log, spark, path, out)
         ok = all(m[k] == v for k, v in inp.expected.items())
-        return inp, op(kind, wall, ok, rows=inp.expected["n_lines"])
-
-    def _read(self, spark) -> dict:
-        top, wall = timed(_top_counts, spark, os.path.join(self.out, "ranking"))
-        return op("read", wall, top == self.last.top_counts)
-
-    def cold(self, spark) -> List[dict]:
-        self.last, rec = self.run_once(spark, self.first, self.out, "run")
-        return [rec]
-
-    def _run(self, spark) -> dict:
-        self.last, rec = self.run_once(spark, self.next_part(self.n_lines), self.out, "run")
-        return rec
-
-    def _merge(self, spark) -> dict:
-        """A small batch of new log lines through run_log: the latency of
-        keeping the benchmark tables current as the endpoint log grows."""
-        return self.run_once(spark, self.next_part(self.N_BATCH), self.out + "_batch", "merge")[1]
-
-    def cycle(self, spark, i: int) -> List[Callable[[], dict]]:
-        return (
-            [lambda: self._run(spark)]
-            + [lambda: self._read(spark)] * self.READS
-            + [lambda: self._merge(spark)] * self.MERGES
-        )
-
-    def out_bytes_per_in_byte(self) -> float:
-        return du(self.out) / self.last.in_bytes
+        return inp, op("run", wall, ok, rows=inp.expected["n_lines"])
 
 
 # --------------------------------------------------------------------- serve
@@ -291,7 +272,9 @@ class Serve(Workload):
     name = "serve"
     N_ENTITIES = 2000
     MERGE_AFTER = (4, 9)  # a cycle: 9 reads, a merge after the 4th and the 9th
-    WARMUP_CYCLES = 1  # read latencies still fall by a third over the first passes
+    # read latencies fall by 40% over the first five cycles after the cold
+    # pass, then level off
+    WARMUP_CYCLES = 4
     BATCH_FRAC = 0.01
 
     def prepare(self) -> None:
