@@ -29,6 +29,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge.frames import local_frame
+
 PID_COL = "kg_pid"
 
 CHECKPOINT_SCHEMA = (
@@ -55,7 +57,7 @@ class CheckpointStore:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+            return local_frame(self.spark, [], CHECKPOINT_SCHEMA)
         cp = self.spark.read.parquet(self.path)
         # a checkpoints dir written before the attempt column existed (or a
         # mixed old/new dir, where parquet resolves schema from an arbitrary

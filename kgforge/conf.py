@@ -48,9 +48,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     # local[N] -> N slots; ~2x slots for shuffle parallelism, never 200-default
-    n_slots = int(cpus) if master.startswith("local[") and master[6:-1].isdigit() else int(cpus)
-    if master.startswith("local[") and master[6:-1].isdigit():
-        n_slots = int(master[6:-1])
+    n_slots = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else int(cpus)
     # = cores, not the 200 default and not 2x: with AQE coalescing ON, extra
     # initial reduce tasks only add scheduling overhead (measured: 64 vs 16
     # partitions at local[32] cost +35% wall on a 240k-row run)

@@ -24,6 +24,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from kgforge.frames import local_frame
+
 
 def _words(col: str = "text") -> F.Column:
     return F.split(F.trim(F.col(col)), r"\s+")
@@ -613,7 +615,7 @@ def incremental_dedup_update(
         # re-cluster of this batch alone (VERDICT r4 item 2: the old bare
         # `except Exception` silently reset the whole dedup state).
         if not fs.exists(path):
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return spark.read.parquet(path)
 
     # minhash persists band signatures (the sketch is not recoverable from
@@ -1632,8 +1634,8 @@ def incremental_substring_dedup(
     lo = new_docs.agg(F.min(id_col), F.max(id_col)).head()
     batch_min, batch_max = lo[0], lo[1]
     if batch_min is None:  # empty batch: a no-op, not a state mutation
-        return new_docs.sparkSession.createDataFrame(
-            [], f"{id_col} long, {text_col} string, n_stripped long"
+        return local_frame(
+            new_docs.sparkSession, [], f"{id_col} long, {text_col} string, n_stripped long"
         )
     prev_max = meta.get("max_doc_id")
     if prev_max is not None and batch_min <= prev_max:
@@ -1653,7 +1655,7 @@ def incremental_substring_dedup(
     if fs.exists(keepers_p):
         old = spark.read.parquet(keepers_p)
     else:
-        old = spark.createDataFrame([], f"gh long, {id_col} long, s int")
+        old = local_frame(spark, [], f"gh long, {id_col} long, s int")
     # prune the registry to grams the batch actually contains
     old_hit = old.join(batch_first.select("gh"), "gh", "left_semi").select(
         "gh", F.col(id_col).alias("kid"), F.col("s").alias("ks")

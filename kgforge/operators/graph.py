@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from kgforge.frames import local_frame
+
 
 def void_stats(
     triples: DataFrame,
@@ -201,9 +203,7 @@ def _pagerank_local_df(e, nodes, deg, n: int, iters: int, damping: float):
             StructField("rank", DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(
-        [(v, float(r_vec[i])) for i, v in enumerate(ids)], schema
-    )
+    return local_frame(spark, zip(ids, r_vec.tolist()), schema)
 
 
 def _adj_arrays(src, dst, n):
@@ -412,18 +412,23 @@ def path_closure(
     under the composite predicate name 'pred+' / 'pred*'.  A leading '^'
     traverses inverse edges, as in path_compose.
 
-    Scale shape — ITERATIVE DOUBLING, not naive expansion: with R_1 = E
-    and R_{2k} = R_k UNION R_k JOIN R_k, round i covers every path length
-    <= 2^i, so a diameter-d graph converges in ceil(log2 d) joins instead
-    of d semi-naive steps — the same O(log d) round discipline as the
+    Scale shape — two routes on the MEASURED distinct edge count.  Up to
+    KGFORGE_TC_LOCAL_MAX_EDGES (default 4M) the closure runs in ONE
+    executor task as a vectorized NumPy kernel (_closure_local_df).  Past
+    the cap it runs DELTA-DOUBLING, not naive expansion: with R_1 = E and
+    R_{i+1} = R_i UNION (R_i JOIN delta_i), where delta_i holds the pairs
+    first reached in round i, round i covers every path length <= 2^i, so
+    a diameter-d graph converges in ceil(log2 d) joins instead of d
+    semi-naive steps — the same O(log d) round discipline as the
     connected-components loop (dedup.py), and the difference between 11
-    rounds and 2000 on a depth-2000 chain.  Each round is one
-    self-equi-join on the 8-byte node id + DISTINCT (pair semantics: the
-    frontier is bounded by reachable PAIRS, never path multiplicities —
-    cycles terminate at the fixpoint instead of looping), localCheckpoint
-    to keep lineage constant-depth, and ONE count action for the
-    convergence test.  ``max_rounds`` bounds the loop at paths of length
-    2^max_rounds (default: a million-hop diameter) as a runaway guard.
+    rounds and 2000 on a depth-2000 chain.  Each round joins R with the
+    delta only (not R with itself), then one aggregation both dedups and
+    tags the new pairs (pair semantics: the frontier is bounded by
+    reachable PAIRS, never path multiplicities — cycles terminate at the
+    fixpoint instead of looping), localCheckpoint keeps lineage
+    constant-depth, and ONE count action tests convergence.  Both routes
+    bound covered path length at 2^``max_rounds`` (default: a million-hop
+    diameter) as a runaway guard, so their results are identical.
 
     GROUND ENDPOINTS (round 7, VERDICT r6 item 1): when either endpoint of
     the path is a known constant (``src``/``dst``), the all-pairs closure

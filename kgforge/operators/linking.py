@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgforge.frames import local_frame
+
 NO_ETYPE = "~"  # join-key sentinel for "predicate selects no entity type"
 
 
@@ -66,7 +68,7 @@ def best_entity_per_surface(
     dict-sized and joins here on the dim side; the fact-side plan shape is
     unchanged (broadcast joins only, plan-gated)."""
     keys = entity_dict.select(F.col("etype").alias("etype_key")).distinct()
-    keys = keys.union(keys.sparkSession.createDataFrame([(NO_ETYPE,)], ["etype_key"])).distinct()
+    keys = keys.union(local_frame(keys.sparkSession, [(NO_ETYPE,)], "etype_key string")).distinct()
     scored = entity_dict.crossJoin(keys).withColumn(
         "score",
         F.col("prior")

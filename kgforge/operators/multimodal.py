@@ -21,6 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kgforge.frames import local_frame
+
 ASSET_SCHEMA = (
     "asset_id long, kind string, data binary, meta map<string,string>"
 )
@@ -38,7 +40,7 @@ def synth_assets(spark: SparkSession, n: int = 64) -> DataFrame:
         rows.append(
             (i, kind, bytearray(blob), {"codec": f"{kind}/fake", "w": str(64 + i)})
         )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return local_frame(spark, rows, ASSET_SCHEMA)
 
 
 def _decode_bytes(kind: str, data: bytes, mode: str) -> np.ndarray:

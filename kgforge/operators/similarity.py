@@ -13,6 +13,8 @@ from typing import List, Sequence
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from kgforge.frames import local_frame
+
 
 def _lit_vec(vec: Sequence[float]) -> F.Column:
     return F.array(*[F.lit(float(v)) for v in vec])
@@ -690,9 +692,7 @@ def semantic_dedup(
         # every vector is its own group — skip the CC join machinery
         # entirely (round 7: ~4 s of empty-graph label-propagation jobs)
         id_type = dict(assigned.dtypes)[id_col]
-        comp = pairs.sparkSession.createDataFrame(
-            [], f"id {id_type}, component {id_type}"
-        )
+        comp = local_frame(pairs.sparkSession, [], f"id {id_type}, component {id_type}")
     else:
         comp = connected_components(pairs)
     return assigned.join(

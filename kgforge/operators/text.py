@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from kgforge.frames import local_frame
+
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it")
 _PUNCT = "[.,;:!?'\"()]"
 # BPE-ish token regex: words, numbers, or single non-space symbols
@@ -650,7 +652,8 @@ def importance_weights(
     import math as _math
 
     spark = docs.sparkSession
-    ratio = spark.createDataFrame(
+    ratio = local_frame(
+        spark,
         [
             (
                 b,

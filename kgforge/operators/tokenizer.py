@@ -44,6 +44,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from kgforge.frames import local_frame
 from kgforge.operators.text import TOKEN_RE
 
 END = "</w>"  # end-of-word marker, a symbol of its own (Sennrich-style)
@@ -64,7 +65,7 @@ class BPEModel:
     def to_df(self, spark) -> DataFrame:
         """(rank, left, right) — persistable/parquet-round-trippable form."""
         rows = [(i, a, b) for i, (a, b) in enumerate(self.merges)]
-        return spark.createDataFrame(rows, "rank int, left string, right string")
+        return local_frame(spark, rows, "rank int, left string, right string")
 
     @classmethod
     def from_df(cls, df: DataFrame) -> "BPEModel":

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from kgforge.catalog import ParquetCatalog
 from kgforge.checkpoint import PID_COL, CheckpointStore, with_pid
 from kgforge.corpus import entity_dict_rows
+from kgforge.frames import local_frame
 from kgforge.operators.extract import extract_parse_sink, prefilter, with_content_sha
 from kgforge.operators.linking import corpus_context_priors, link_terms
 from kgforge.operators.triples import explode_tps, graph_triples, write_graph
@@ -82,8 +83,8 @@ def _read_parsed(
     try:
         parsed = spark.read.parquet(cat.path("parsed"))
     except Exception:
-        return spark.createDataFrame(
-            [], PARSED_SCHEMA + f", {PID_COL} int, {ATTEMPT_COL} string"
+        return local_frame(
+            spark, [], PARSED_SCHEMA + f", {PID_COL} int, {ATTEMPT_COL} string"
         )
     if store is None:
         return parsed
@@ -128,8 +129,18 @@ def _count_parquet(spark: SparkSession, path: str) -> int:
 
 
 def default_entity_dict(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        entity_dict_rows(), "surface string, entity_id string, prior double, etype string"
+    return local_frame(
+        spark, entity_dict_rows(), "surface string, entity_id string, prior double, etype string"
+    )
+
+
+def checkpoint_stats(spark: SparkSession, present: dict, per_pid: dict) -> DataFrame:
+    """Per-pid checkpoint stats: (pid, n_in) from ``present``, (n_out,
+    sha_fingerprint) from the sink's ``per_pid`` summaries (0 when absent)."""
+    return local_frame(
+        spark,
+        [(int(p), int(n), *per_pid.get(p, (0, 0))) for p, n in present.items()],
+        f"{PID_COL} int, n_in long, n_out long, sha_fingerprint long",
     )
 
 
@@ -222,13 +233,7 @@ def run_stage1(
             .collect()
         }
         metrics["n_pending"] = int(sum(present.values()))
-        stats = spark.createDataFrame(
-            [
-                (int(p), int(n), per_pid.get(p, (0, 0))[0], per_pid.get(p, (0, 0))[1])
-                for p, n in present.items()
-            ],
-            f"{PID_COL} int, n_in long, n_out long, sha_fingerprint long",
-        )
+        stats = checkpoint_stats(spark, present, per_pid)
         store.mark_done("parsed", stats, int((time.time() - t0) * 1000), attempt=run_id)
         metrics["t_checkpoint_s"] = round(time.time() - t, 2)
 
@@ -442,7 +447,7 @@ def _finish(spark, cat, source, run_id, metrics) -> dict:
         (run_id, "pipeline", "stage2_wall_s", metrics["stage2_wall_s"]),
     ]
     cat.append_table(
-        spark.createDataFrame(rows, "run_id string, stage string, metric string, value double"),
+        local_frame(spark, rows, "run_id string, stage string, metric string, value double"),
         "stage_metrics",
     )
     return metrics

@@ -42,6 +42,7 @@ from typing import Callable, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from kgforge.frames import local_frame
 from kgforge.sparql.parser import parse_query
 from kgforge.sparql.terms import BNODE, VAR, Term, TriplePattern
 
@@ -591,8 +592,8 @@ def answer_sparql(
     base = r.base_tps if r.base_tps is not None else r.tps
     if r.query_form == "DESCRIBE" and not r.tps:
         # DESCRIBE <iri> ...: no WHERE — straight to the description
-        nodes = triples.sparkSession.createDataFrame(
-            [(term_str(t),) for t in r.describe_terms], "node string"
+        nodes = local_frame(
+            triples.sparkSession, [(term_str(t),) for t in r.describe_terms], "node string"
         )
         return _describe_nodes(triples, nodes, subj_col, pred_col, obj_col)
     if (
@@ -654,8 +655,8 @@ def answer_sparql(
             )
             if consts:
                 reach = reach.unionByName(
-                    triples.sparkSession.createDataFrame(
-                        [(c, c) for c in consts], "__s string, __o string"
+                    local_frame(
+                        triples.sparkSession, [(c, c) for c in consts], "__s string, __o string"
                     )
                 ).distinct()
         else:
@@ -765,8 +766,8 @@ def answer_sparql(
         # the base/every arm, so a plain inner equi-join is exact SPARQL
         # Join(group, data) — and Catalyst broadcasts the literal rows
         vvars, vrows = r.values
-        inline = triples.sparkSession.createDataFrame(
-            [tuple(row) for row in vrows], ", ".join(f"{v} string" for v in vvars)
+        inline = local_frame(
+            triples.sparkSession, vrows, ", ".join(f"{v} string" for v in vvars)
         )
         sols = sols.join(F.broadcast(inline), on=list(vvars))
     for opt_tps, opt_filters in r.optionals:
@@ -835,14 +836,16 @@ def answer_sparql(
         iris = [(term_str(t),) for t in r.describe_terms if t.kind != VAR]
         if iris:
             parts.append(
-                triples.sparkSession.createDataFrame(iris, "node string")
+                local_frame(triples.sparkSession, iris, "node string")
             )
         if not parts:
             # ADVICE r6 medium: DESCRIBE of a var bound nowhere in the
             # WHERE clause — SPARQL semantics are an empty description,
             # not an IndexError
-            return triples.sparkSession.createDataFrame(
-                [], f"{subj_col} string, {pred_col} string, {obj_col} string"
+            return local_frame(
+                triples.sparkSession,
+                [],
+                f"{subj_col} string, {pred_col} string, {obj_col} string",
             )
         nodes = parts[0]
         for part in parts[1:]:
