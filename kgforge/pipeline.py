@@ -119,15 +119,6 @@ def _read_parsed(
     ).drop("_vis")
 
 
-def _count_parquet(spark: SparkSession, path: str) -> int:
-    """Row count, 0 when the table is empty-partitioned (no parquet footers to
-    infer a schema from — happens on empty input)."""
-    try:
-        return spark.read.parquet(path).count()
-    except Exception:
-        return 0
-
-
 def default_entity_dict(spark: SparkSession) -> DataFrame:
     return local_frame(
         spark, entity_dict_rows(), "surface string, entity_id string, prior double, etype string"

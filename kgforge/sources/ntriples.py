@@ -114,18 +114,21 @@ def ntriples_lines(
 
 
 def write_ntriples(
-    triples: DataFrame, path: str, compression: str | None = "lz4", **kw
+    triples: DataFrame, path: str, compression: str | None = None, **kw
 ) -> None:
     """Shard a triple table to ``path`` as N-Triples text files.
 
-    Round 7 (optimization guide §6): shards are lz4-compressed by default —
-    IRI-heavy N-Triples compresses ~6x (1.1 GB -> 177 MB at the 13.7M-triple
-    scale), and interchange dumps ship compressed in practice (DBpedia
-    publishes .bz2).  ``spark.read.text`` decompresses by extension, so the
-    round-trip is unchanged; pass ``compression=None`` for plain ``.txt``
-    shards (e.g. for consumers that need byte-range splittable input —
-    compressed text files parallelize per FILE, one task each, so the
-    writer's shard count should stay >= cluster cores for big exports)."""
+    Shards are plain ``.txt`` by default, so standard tools (``cat``,
+    ``grep``, rdflib, any N-Triples loader) read them as they are.  Pass
+    ``compression="gzip"`` for ``.txt.gz`` shards that ``gzip``/``zcat``
+    read: IRI-heavy N-Triples compresses several-fold, and interchange
+    dumps ship compressed in practice (DBpedia publishes .bz2).  Spark's
+    default Hadoop lz4 framing is not what the ``lz4`` command-line tool
+    reads, so it is not offered as a default.  ``spark.read.text`` (and
+    ``read_ntriples``) decompresses by extension, so the round-trip reads
+    either form.  Compressed text files parallelize per FILE, one task
+    each, so keep the writer's shard count >= cluster cores for big
+    compressed exports; plain shards are byte-range splittable."""
     w = ntriples_lines(triples, **kw).write.mode("overwrite")
     if compression:
         w = w.option("compression", compression)

@@ -1,35 +1,39 @@
-"""BGP evaluation: compile SPARQL basic graph patterns into DataFrame plans
-over a materialized (subj, pred, obj) triple table.
+"""SPARQL evaluation: compile a query over a materialized (subj, pred, obj)
+triple table into ONE parameterized Spark SQL statement.
 
-The missing half of the SPARQL surface until round 6: the engine could
-PARSE queries (parser.py), canonicalize them (canonical.py), and answer
-sequence property paths (operators/graph.py:path_compose) — this module
-makes it ANSWER them.  A BGP of n triple patterns compiles to n filtered
-scans of the triple table joined on their shared variables; everything is
-declarative DataFrame API, so Catalyst owns the physical strategy:
+The engine PARSES queries (parser.py) and canonicalizes them
+(canonical.py); this module ANSWERS them.  Every entry point below --
+``answer_sparql``, the ``eval_*`` combinators and the incremental
+``eval_bgp_delta`` -- builds the whole query as SQL text plus bindings and
+hands it to ``spark.sql(text, args=..., **frames)``, so the statement is
+parsed and analyzed once.  Building the same plan one DataFrame call at a
+time re-analyzes the growing plan on every call (hundreds of Py4J round
+trips per query, as much time as the query's execution on small graphs).
 
-  * constant positions become equality filters BEFORE any join — on a
-    predicate-partitioned graph table the pred filter is a partition prune,
-    and subj/obj constants reach the parquet scan as PushedFilters
-    (plan-gated in tests/test_bgp_eval.py);
-  * join order is chosen greedily by selectivity (most constant positions
-    first) and connectivity (never a cartesian product while a connected
-    pattern remains) — the classic heuristic for star/chain BGPs.  AQE
-    re-plans the actual join strategies at runtime (a 2-constant pattern
-    usually collapses to a broadcast side);
+  * bindings, never splicing: every RDF constant and FILTER/BIND literal
+    is a named parameter (``:c0``, ``:c1``, ...); every DataFrame input
+    (the triple table, path_closure's result, VALUES / DESCRIBE node
+    frames) is a named frame (``{f0}``, ...).  Identifiers are backquoted
+    with backquotes and braces doubled (``_id``), so no caller column name
+    or SPARQL variable can break the text or the kwargs formatter;
+  * column sets are tracked in Python (``Rel.cols``) and mirror what Spark
+    gives the same operators (a ``USING`` join puts its keys first), so no
+    plan is analyzed just to read its ``.columns``;
+  * a BGP of n triple patterns is n filtered scans joined ``USING`` their
+    shared variables.  Constant positions become equality filters below
+    the joins: on a predicate-partitioned graph the pred filter is a
+    partition prune, and subj/obj constants reach the parquet scan as
+    PushedFilters (plan-gated in tests/test_bgp_eval.py);
+  * join order is greedy: seed with the most-constant pattern, then
+    always extend through a shared variable; a cartesian step is taken
+    only for a disjoint BGP.  AQE re-plans the join strategies at runtime;
   * bag semantics: an RDF graph is a SET of triples, so inner joins on
     shared variables reproduce SPARQL's solution multiplicities exactly,
     provided the input table is duplicate-free (the engine's own
-    `agg_dedup` / build_graph outputs are; we deliberately do NOT pay a
-    defensive distinct shuffle here).
-
-Scale: the only shuffles are the pattern joins themselves, each keyed on a
-bound variable column.  No driver-side data, no UDFs, no collect — a
-100-pattern query is 100 scans of partition-pruned slices joined by
-Catalyst, the same plan shape a SQL engine gives 100 dimension joins.
+    ``agg_dedup`` / build_graph outputs are; no defensive distinct here).
 
 Term matching: triple tables in this engine store PLAIN strings (IRIs
-without ``<>``, literal lexical forms — see queries.py:_dm_triples and
+without ``<>``, literal lexical forms -- see queries.py:_dm_triples and
 operators/triples.py), so constants match on ``Term.value``.  Pass
 ``term_str`` to override (e.g. N-Triples rendering via terms.render_term
 when the table stores full RDF terms).
@@ -38,9 +42,9 @@ when the table stores full RDF terms).
 from __future__ import annotations
 
 import re
-from typing import Callable, List, Optional, Sequence, Set, Tuple
+from typing import Callable, Dict, List, NamedTuple, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from kgforge.frames import local_frame
 from kgforge.sparql.parser import parse_query
@@ -52,6 +56,7 @@ def _default_term_str(t: Term) -> str:
 
 
 _BN_SAFE = re.compile(r"[^A-Za-z_0-9]")
+_NULL = "CAST(NULL AS STRING)"
 
 
 def _coerce_tp(tp) -> TriplePattern:
@@ -90,76 +95,235 @@ def _internal(v: str) -> bool:
     return v.startswith("__bn_") or v.startswith("_path")
 
 
-def _tp_scan(
-    triples: DataFrame,
-    tp: TriplePattern,
-    cols: Tuple[str, str, str],
-    term_str: Callable[[Term], str],
-) -> Tuple[DataFrame, Set[str], int]:
-    """One pattern -> (scan DataFrame selecting exactly its var columns,
-    var set, constant count).  Fully-ground patterns (no vars) return a
-    single marker column; the join loop treats them as existence gates."""
-    pos = list(zip((tp.s, tp.p, tp.o), cols))
-    df = triples
-    n_consts = 0
-    var_cols: dict = {}
-    for term, col in pos:
+def _id(name: str) -> str:
+    """Backquoted identifier, safe in the SQL text (doubled backquotes) and
+    through spark.sql's kwargs formatter (doubled braces)."""
+    return "`" + name.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
+
+
+def _sel(cols: Sequence[str]) -> str:
+    # a relation without columns (fully-ground BGP) still needs a select
+    # list; ``_Sql.run`` projects the placeholder away
+    return ", ".join(map(_id, cols)) or "1 AS __unit"
+
+
+class Rel(NamedTuple):
+    """A relation under construction: its SQL text and its columns."""
+
+    sql: str
+    cols: Tuple[str, ...]
+
+
+class _Sql:
+    """The bindings of one statement: named parameters, named frames and
+    common table expressions, over one triple table."""
+
+    def __init__(
+        self,
+        triples: DataFrame,
+        subj_col: str = "subj",
+        pred_col: str = "pred",
+        obj_col: str = "obj",
+        term_str: Callable[[Term], str] = _default_term_str,
+    ):
+        self.spark = triples.sparkSession
+        self.args: Dict[str, object] = {}
+        self.frames: Dict[str, DataFrame] = {}
+        self.ctes: List[str] = []
+        self.cols = (subj_col, pred_col, obj_col)
+        self.s, self.p, self.o = map(_id, self.cols)
+        self.term_str = term_str
+        self.triples = self.frame(triples)
+
+    def lit(self, value) -> str:
+        name = f"c{len(self.args)}"
+        self.args[name] = value
+        return ":" + name
+
+    def const(self, term: Term) -> str:
+        return self.lit(self.term_str(term))
+
+    def frame(self, df: DataFrame) -> str:
+        name = f"f{len(self.frames)}"
+        self.frames[name] = df
+        return "{" + name + "}"
+
+    def cte(self, rel: Rel) -> Rel:
+        """Name ``rel`` once for a statement that reads it more than once."""
+        name = f"_w{len(self.ctes)}"
+        self.ctes.append(f"{name} AS ({rel.sql})")
+        return Rel(f"SELECT {_sel(rel.cols)} FROM {name}", rel.cols)
+
+    def run(self, rel: Rel) -> DataFrame:
+        text = ("WITH " + ", ".join(self.ctes) + " " if self.ctes else "") + rel.sql
+        df = self.spark.sql(text, args=self.args, **self.frames)
+        return df if rel.cols else df.select()
+
+
+def _project(rel: Rel, cols: Sequence[str]) -> Rel:
+    """``cols`` in this order; a var the relation does not bind projects as
+    NULL (SPARQL's unbound)."""
+    sel = ", ".join(f"{_id(c) if c in rel.cols else _NULL} AS {_id(c)}" for c in cols)
+    return Rel(f"SELECT {sel or '1 AS __unit'} FROM ({rel.sql})", tuple(cols))
+
+
+def _distinct(rel: Rel) -> Rel:
+    return Rel(f"SELECT DISTINCT {_sel(rel.cols)} FROM ({rel.sql})", rel.cols)
+
+
+def _union(rels: Sequence[Rel], cols: Sequence[str]) -> Rel:
+    """Bag UNION of ``rels`` aligned on ``cols`` with NULL padding."""
+    return Rel(" UNION ALL ".join(_project(r, cols).sql for r in rels), tuple(cols))
+
+
+def _join(left: Rel, right: Rel, how: str, keys: Sequence[str], hint: str = "") -> Rel:
+    """``left <how> JOIN right USING (keys)``, or ``ON true`` without keys.
+    Output columns as Spark orders a USING join: keys, then the rest of
+    left, then (except for semi/anti joins) the rest of right."""
+    on = f"USING ({', '.join(map(_id, keys))})" if keys else "ON true"
+    cols = list(keys) + [c for c in left.cols if c not in keys]
+    if how not in ("LEFT SEMI", "LEFT ANTI"):
+        cols += [c for c in right.cols if c not in cols]
+    hint = f"/*+ {hint}(_r) */ " if hint else ""
+    return Rel(
+        f"SELECT {hint}{_sel(cols)} FROM ({left.sql}) AS _l {how} JOIN ({right.sql}) AS _r {on}",
+        tuple(cols),
+    )
+
+
+def _filter_ast_vars(ast: tuple) -> set:
+    """Every var name referenced by a FILTER AST."""
+    kind = ast[0]
+    if kind in ("or", "and"):
+        return _filter_ast_vars(ast[1]) | _filter_ast_vars(ast[2])
+    if kind == "not":
+        return _filter_ast_vars(ast[1])
+    if kind == "cmp":
+        return {o[1] for o in (ast[2], ast[3]) if o[0] == "var"}
+    if kind == "call":
+        return {a[1] for a in ast[2] if a[0] == "var"}
+    return set()
+
+
+def compile_filter(q: _Sql, ast: tuple) -> str:
+    """Compile a parser FILTER AST (parser.py:parse_filter_expr) into a SQL
+    condition whose literals are parameters of ``q``.  SPARQL's error
+    semantics map onto SQL's three-valued logic exactly: a type error (e.g.
+    a non-numeric string under a numeric comparison, via try_cast -> NULL)
+    makes the comparison NULL, NULL propagates through NOT/AND/OR the same
+    way SPARQL errors do (false && error = false, true || error = true),
+    and a NULL condition drops the row — SPARQL's 'error eliminates the
+    solution'.
+
+    Comparison typing over this engine's plain-string term model: a
+    numeric literal on either side compares numerically (both sides
+    try_cast to double); otherwise lexical string comparison.
+    """
+    kind = ast[0]
+    if kind in ("or", "and"):
+        return f"({compile_filter(q, ast[1])} {kind.upper()} {compile_filter(q, ast[2])})"
+    if kind == "not":
+        return f"(NOT {compile_filter(q, ast[1])})"
+
+    def operand(o) -> str:
+        return _id(o[1]) if o[0] == "var" else q.lit(o[1])
+
+    if kind == "cmp":
+        _, op, lhs, rhs = ast
+        if op not in ("=", "!=", "<", "<=", ">", ">="):
+            raise ValueError(f"unknown filter comparison {op!r}")
+        a, b = operand(lhs), operand(rhs)
+        if any(o[0] == "lit" and o[2] == "num" for o in (lhs, rhs)):
+            a, b = f"try_cast({a} AS DOUBLE)", f"try_cast({b} AS DOUBLE)"
+        return f"({a} {op} {b})"
+    if kind == "call":
+        _, name, args = ast
+        a = operand(args[0])
+        if name == "regex":
+            pat = str(args[1][1])
+            if len(args) == 3 and args[2][1] == "i":
+                pat = "(?i)" + pat
+            return f"({a} RLIKE {q.lit(pat)})"
+        fn = {"contains": "contains", "strstarts": "startswith", "strends": "endswith"}
+        if name in fn:
+            return f"{fn[name]}({a}, {operand(args[1])})"
+    raise ValueError(f"unknown filter AST node {ast!r}")
+
+
+def _where(q: _Sql, filters: Sequence[tuple], cols) -> str:
+    """WHERE clause for ``filters`` over a relation binding ``cols``.  A
+    filter naming a var the relation does not bind is constant-false:
+    SPARQL's unbound -> error -> eliminate."""
+    conds = [
+        compile_filter(q, fx) if _filter_ast_vars(fx) <= set(cols) else "false"
+        for fx in filters
+    ]
+    return " WHERE " + " AND ".join(conds) if conds else ""
+
+
+def _filtered(q: _Sql, rel: Rel, filters: Sequence[tuple]) -> Rel:
+    if not filters:
+        return rel
+    return Rel(f"SELECT {_sel(rel.cols)} FROM ({rel.sql}){_where(q, filters, rel.cols)}", rel.cols)
+
+
+def _value_expr(q: _Sql, ast: tuple) -> str:
+    """Compile a BIND value-expression AST (parser.py:parse_bind_expr):
+    operands plus CONCAT/UCASE/LCASE/STRLEN, everything string-typed over
+    the plain-string term model (numeric literals keep their lexical
+    float form)."""
+    kind = ast[0]
+    if kind == "var":
+        return _id(ast[1])
+    if kind == "lit":
+        return f"CAST({q.lit(ast[1])} AS STRING)" if ast[2] == "num" else q.lit(ast[1])
+    if kind == "fn":
+        _, name, args = ast
+        fn = {"concat": "concat", "ucase": "upper", "lcase": "lower", "strlen": "length"}
+        if name in fn:
+            cols = [f"CAST({_value_expr(q, a)} AS STRING)" for a in args]
+            return f"{fn[name]}({', '.join(cols if name == 'concat' else cols[:1])})"
+    raise ValueError(f"unknown bind AST node {ast!r}")
+
+
+def _scan(q: _Sql, src: str, tp: TriplePattern, k: int) -> Tuple[str, List[str], int]:
+    """One pattern -> (SELECT over ``src`` binding exactly its var columns,
+    vars, constant count).  A fully-ground pattern selects a single marker
+    row: the join treats it as an existence gate."""
+    where: List[str] = []
+    var_cols: Dict[str, List[str]] = {}
+    for term, col in zip((tp.s, tp.p, tp.o), q.cols):
         v = _var_name(term)
         if v is None:
-            df = df.filter(F.col(col) == term_str(term))
-            n_consts += 1
+            where.append(f"{_id(col)} = {q.const(term)}")
         else:
             var_cols.setdefault(v, []).append(col)
+    n_consts = len(where)
     # same var twice in one pattern (?x p ?x): intra-pattern equality
-    for v, cs in var_cols.items():
-        for extra in cs[1:]:
-            df = df.filter(F.col(cs[0]) == F.col(extra))
+    where += [f"{_id(cs[0])} = {_id(c)}" for cs in var_cols.values() for c in cs[1:]]
+    cond = " WHERE " + " AND ".join(where) if where else ""
     if not var_cols:
-        return df.select(F.lit(1).alias("__ground")).limit(1), set(), n_consts
-    sel = [F.col(cs[0]).alias(v) for v, cs in var_cols.items()]
-    return df.select(*sel), set(var_cols), n_consts
+        return f"SELECT 1 AS __ground{k} FROM {src}{cond} LIMIT 1", [], n_consts
+    sel = ", ".join(f"{_id(cs[0])} AS {_id(v)}" for v, cs in var_cols.items())
+    return f"SELECT {sel} FROM {src}{cond}", list(var_cols), n_consts
 
 
-def eval_bgp(
-    triples: DataFrame,
+def _bgp(
+    q: _Sql,
     tps: Sequence,
     select: Optional[Sequence[str]] = None,
-    distinct: bool = False,
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-    term_str: Callable[[Term], str] = _default_term_str,
-    per_tp_triples: Optional[Sequence[DataFrame]] = None,
-) -> DataFrame:
-    """Evaluate a conjunctive BGP; returns one column per variable.
-
-    ``select``: project these vars in this order (a var bound nowhere in
-    the BGP projects as NULL, per SPARQL's unbound semantics); None = all
-    non-internal vars in first-appearance order.  ``distinct`` applies
-    SELECT DISTINCT set semantics; default is SPARQL's bag semantics.
-    """
+    filters: Sequence[tuple] = (),
+    sources: Optional[Sequence[str]] = None,
+) -> Rel:
+    """A conjunctive BGP (then ``filters``) as one relation.  ``select``
+    projects these vars in this order (a var bound nowhere projects as
+    NULL); None = all non-internal vars in first-appearance order.
+    ``sources`` gives each pattern its own table expression (the
+    delta-join staircase); default: every pattern scans the triple table."""
     assert tps, "empty BGP"
-    cols = (subj_col, pred_col, obj_col)
     patterns = [_coerce_tp(tp) for tp in tps]
-    # per_tp_triples: one source frame per pattern (the incremental
-    # delta-staircase uses old/delta/new mixes — eval_bgp_delta below);
-    # default: every pattern scans the same table
-    sources = (
-        per_tp_triples if per_tp_triples is not None else [triples] * len(patterns)
-    )
-    assert len(sources) == len(patterns)
-    scans = [
-        _tp_scan(src, tp, cols, term_str) for src, tp in zip(sources, patterns)
-    ]
-
-    # var order for SELECT *: first appearance in pattern-position order
-    order: List[str] = []
-    for tp in patterns:
-        for term in (tp.s, tp.p, tp.o):
-            v = _var_name(term)
-            if v is not None and v not in order:
-                order.append(v)
-
+    sources = sources or [q.triples] * len(patterns)
+    scans = [_scan(q, src, tp, k) for k, (src, tp) in enumerate(zip(sources, patterns))]
     # greedy join order: seed with the most-constant pattern, then always
     # extend through a shared variable (equi-join); a cartesian step is
     # taken only when no remaining pattern connects (disjoint BGP — legal
@@ -167,32 +331,52 @@ def eval_bgp(
     remaining = list(range(len(scans)))
     seed = max(remaining, key=lambda i: (scans[i][2], -i))
     remaining.remove(seed)
-    out, bound = scans[seed][0], set(scans[seed][1])
+    text, bound = f"({scans[seed][0]}) AS _p{seed}", set(scans[seed][1])
     while remaining:
-        connected = [i for i in remaining if scans[i][1] & bound]
+        connected = [i for i in remaining if bound.intersection(scans[i][1])]
         if connected:
-            nxt = max(connected, key=lambda i: (len(scans[i][1] & bound), scans[i][2], -i))
-            shared = sorted(scans[nxt][1] & bound)
-            out = out.join(scans[nxt][0], on=shared)
+            nxt = max(
+                connected,
+                key=lambda i: (len(bound.intersection(scans[i][1])), scans[i][2], -i),
+            )
+            shared = sorted(bound.intersection(scans[nxt][1]))
+            text += f" JOIN ({scans[nxt][0]}) AS _p{nxt} USING ({', '.join(map(_id, shared))})"
         else:
             nxt = max(remaining, key=lambda i: (scans[i][2], -i))
-            out = out.crossJoin(scans[nxt][0])
+            text += f" CROSS JOIN ({scans[nxt][0]}) AS _p{nxt}"
         remaining.remove(nxt)
-        bound |= scans[nxt][1]
-    if "__ground" in out.columns:
-        out = out.drop("__ground")
-
+        bound.update(scans[nxt][1])
+    order = list(dict.fromkeys(v for sc in scans for v in sc[1]))
     if select is not None:
-        proj = [
-            (F.col(v) if v in bound else F.lit(None).cast("string")).alias(v)
-            for v in select
-        ]
+        cols = list(select)
+        sel = ", ".join(f"{_id(v) if v in bound else _NULL} AS {_id(v)}" for v in cols)
     else:
-        proj = [F.col(v) for v in order if not _internal(v)]
-        if not proj:  # all vars internal (e.g. pure-bnode ASK pattern)
-            proj = [F.col(v) for v in order]
-    out = out.select(*proj) if proj else out
-    return out.distinct() if distinct else out
+        # all vars internal (e.g. a pure-bnode ASK pattern): keep them
+        cols = [v for v in order if not _internal(v)] or order
+        sel = _sel(cols)
+    return Rel(f"SELECT {sel or '1 AS __unit'} FROM {text}{_where(q, filters, bound)}", tuple(cols))
+
+
+def eval_bgp(
+    triples: DataFrame,
+    tps: Sequence,
+    select: Optional[Sequence[str]] = None,
+    distinct: bool = False,
+    filters: Sequence[tuple] = (),
+    **kw,
+) -> DataFrame:
+    """Evaluate a conjunctive BGP; returns one column per variable.
+
+    ``select``: project these vars in this order (a var bound nowhere in
+    the BGP projects as NULL, per SPARQL's unbound semantics); None = all
+    non-internal vars in first-appearance order.  ``distinct`` applies
+    SELECT DISTINCT set semantics; default is SPARQL's bag semantics.
+    ``filters`` are parser FILTER ASTs applied before the projection.
+    ``kw``: subj_col / pred_col / obj_col / term_str.
+    """
+    q = _Sql(triples, **kw)
+    rel = _bgp(q, tps, select, filters)
+    return q.run(_distinct(rel) if distinct else rel)
 
 
 def eval_bgp_delta(
@@ -200,6 +384,7 @@ def eval_bgp_delta(
     delta_triples: DataFrame,
     tps: Sequence,
     select: Optional[Sequence[str]] = None,
+    filters: Sequence[tuple] = (),
     **kw,
 ) -> DataFrame:
     """Incremental BGP view maintenance for an INSERT batch: the solutions
@@ -216,7 +401,8 @@ def eval_bgp_delta(
     delta triple; indexing the sum by the FIRST pattern position bound to
     a delta triple produces every new solution exactly once (bag
     multiplicities included), so the result can be UNION ALL'd onto the
-    old solution set with no dedup.
+    old solution set with no dedup.  Both frames must belong to one
+    SparkSession.
 
     Scale shape: n evaluations whose i-th scan is the (small) delta —
     every staircase term is a join chain seeded by the batch, so work is
@@ -224,29 +410,37 @@ def eval_bgp_delta(
     alternative — recompute over old+delta and anti-join — rescans the
     whole graph per batch.
     """
-    new = old_triples.unionByName(delta_triples)
-    parts = []
-    for i in range(len(tps)):
-        sources = (
-            [old_triples] * i + [delta_triples] + [new] * (len(tps) - i - 1)
-        )
-        parts.append(
-            eval_bgp(new, tps, select=select, per_tp_triples=sources, **kw)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    q = _Sql(old_triples, **kw)
+    old, delta, cols = q.triples, q.frame(delta_triples), _sel(q.cols)
+    new = q.cte(Rel(f"SELECT {cols} FROM {old} UNION ALL SELECT {cols} FROM {delta}", q.cols))
+    new_src = "(" + new.sql + ")"
+    parts = [
+        _bgp(q, tps, select, filters, [old] * i + [delta] + [new_src] * (len(tps) - i - 1))
+        for i in range(len(tps))
+    ]
+    return q.run(_union(parts, parts[0].cols))
 
 
-def _bgp_vars(tps: Sequence) -> List[str]:
-    out: List[str] = []
-    for tp in (_coerce_tp(t) for t in tps):
-        for term in (tp.s, tp.p, tp.o):
-            v = _var_name(term)
-            if v is not None and v not in out and not _internal(v):
-                out.append(v)
-    return out
+def _leftjoin(sols: Rel, opt: Rel) -> Rel:
+    """SPARQL's LeftJoin of BGP-shaped solutions: every mentioned var is
+    bound, so compatibility is equality on the shared vars — a left outer
+    join; with no shared vars the spec degenerates to sols x opt, keeping
+    sols rows when opt is empty (``ON true``)."""
+    return _join(sols, opt, "LEFT", sorted(set(sols.cols) & set(opt.cols)))
+
+
+def _minus(sols: Rel, m: Rel) -> Rel:
+    """SPARQL MINUS: drop solutions compatible with some ``m`` solution ON
+    AT LEAST ONE shared var — a LEFT ANTI join on the shared vars; with no
+    shared vars the spec keeps every solution (disjoint domains are never
+    'compatible', SPARQL 8.3)."""
+    shared = sorted(set(sols.cols) & set(m.cols))
+    return _join(sols, _distinct(_project(m, shared)), "LEFT ANTI", shared) if shared else sols
+
+
+def _tail(rel: Rel, select: Optional[Sequence[str]], distinct: bool) -> Rel:
+    rel = _project(rel, select) if select is not None else rel
+    return _distinct(rel) if distinct else rel
 
 
 def eval_optional(
@@ -257,31 +451,9 @@ def eval_optional(
     distinct: bool = False,
     **kw,
 ) -> DataFrame:
-    """Base BGP extended by an OPTIONAL group: SPARQL's LeftJoin.  BGP
-    solutions always bind every mentioned var, so compatibility reduces to
-    equality on the shared vars — a plain left outer join; with no shared
-    vars the spec degenerates to base x optional (cross), keeping base rows
-    when the optional side is empty (the dummy-key left join covers both)."""
-    base = eval_bgp(triples, base_tps, **kw)
-    opt = eval_bgp(triples, optional_tps, **kw)
-    shared = sorted(set(base.columns) & set(opt.columns))
-    if shared:
-        out = base.join(opt, on=shared, how="left")
-    else:
-        k = "__optk"
-        out = (
-            base.withColumn(k, F.lit(1))
-            .join(opt.withColumn(k, F.lit(1)), on=k, how="left")
-            .drop(k)
-        )
-    if select is not None:
-        out = out.select(
-            *[
-                (F.col(v) if v in out.columns else F.lit(None).cast("string")).alias(v)
-                for v in select
-            ]
-        )
-    return out.distinct() if distinct else out
+    """Base BGP extended by an OPTIONAL group (SPARQL's LeftJoin)."""
+    q = _Sql(triples, **kw)
+    return q.run(_tail(_leftjoin(_bgp(q, base_tps), _bgp(q, optional_tps)), select, distinct))
 
 
 def eval_union(
@@ -296,29 +468,10 @@ def eval_union(
     is NULL there (SPARQL unbound), exactly SQL UNION ALL with NULL
     padding."""
     assert groups, "empty UNION"
-    if select is not None:
-        allvars = list(select)
-    else:
-        allvars = []
-        for g in groups:
-            for v in _bgp_vars(g):
-                if v not in allvars:
-                    allvars.append(v)
-    parts = []
-    for g in groups:
-        df = eval_bgp(triples, g, **kw)
-        parts.append(
-            df.select(
-                *[
-                    (F.col(v) if v in df.columns else F.lit(None).cast("string")).alias(v)
-                    for v in allvars
-                ]
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct() if distinct else out
+    q = _Sql(triples, **kw)
+    arms = [_bgp(q, g) for g in groups]
+    cols = select if select is not None else _visible(arms)
+    return q.run(_tail(_union(arms, cols), None, distinct))
 
 
 def eval_minus(
@@ -329,113 +482,14 @@ def eval_minus(
     distinct: bool = False,
     **kw,
 ) -> DataFrame:
-    """SPARQL MINUS: drop base solutions compatible with some minus-group
-    solution ON AT LEAST ONE shared var.  With BGP solutions (every var
-    bound) compatibility is equality on the shared vars -> LEFT ANTI join;
-    with NO shared vars the spec keeps every base solution (disjoint
-    domains are never 'compatible'), so base passes through unchanged."""
-    base = eval_bgp(triples, base_tps, **kw)
-    minus = eval_bgp(triples, minus_tps, **kw)
-    shared = sorted(set(base.columns) & set(minus.columns))
-    out = base.join(minus.select(*shared).distinct(), on=shared, how="left_anti") if shared else base
-    if select is not None:
-        out = out.select(*select)
-    return out.distinct() if distinct else out
+    """Base BGP minus a MINUS group (see ``_minus``)."""
+    q = _Sql(triples, **kw)
+    return q.run(_tail(_minus(_bgp(q, base_tps), _bgp(q, minus_tps)), select, distinct))
 
 
-def _filter_ast_vars(ast: tuple) -> set:
-    """Every var name referenced by a FILTER AST (ADVICE r6 low: used to
-    detect vars absent from the solution frame before compiling)."""
-    kind = ast[0]
-    if kind in ("or", "and"):
-        return _filter_ast_vars(ast[1]) | _filter_ast_vars(ast[2])
-    if kind == "not":
-        return _filter_ast_vars(ast[1])
-    if kind == "cmp":
-        return {o[1] for o in (ast[2], ast[3]) if o[0] == "var"}
-    if kind == "call":
-        return {a[1] for a in ast[2] if a[0] == "var"}
-    return set()
-
-
-def compile_filter(ast: tuple, columns: Sequence[str]) -> "F.Column":
-    """Compile a parser FILTER AST (parser.py:parse_filter_expr) into a
-    Column.  SPARQL's error semantics map onto Spark's three-valued logic
-    exactly: a type error (e.g. a non-numeric string under a numeric
-    comparison, via try_cast -> NULL) makes the comparison NULL, NULL
-    propagates through !/&&/|| the same way SPARQL errors do (false &&
-    error = false, true || error = true), and a NULL filter condition
-    drops the row — which is SPARQL's 'error eliminates the solution'.
-
-    Comparison typing over this engine's plain-string term model: a
-    numeric literal on either side compares numerically (both sides
-    try_cast to double); otherwise lexical string comparison.
-    """
-    kind = ast[0]
-    if kind == "or":
-        return compile_filter(ast[1], columns) | compile_filter(ast[2], columns)
-    if kind == "and":
-        return compile_filter(ast[1], columns) & compile_filter(ast[2], columns)
-    if kind == "not":
-        return ~compile_filter(ast[1], columns)
-    if kind == "cmp":
-        _, op, lhs, rhs = ast
-        numeric = (lhs[0] == "lit" and lhs[2] == "num") or (
-            rhs[0] == "lit" and rhs[2] == "num"
-        )
-
-        def operand(o):
-            c = F.col(o[1]) if o[0] == "var" else F.lit(o[1])
-            return c.try_cast("double") if numeric else c
-
-        a, b = operand(lhs), operand(rhs)
-        return {
-            "=": a == b, "!=": a != b,
-            "<": a < b, "<=": a <= b, ">": a > b, ">=": a >= b,
-        }[op]
-    if kind == "call":
-        _, name, args = ast
-
-        def s(o):
-            return F.col(o[1]) if o[0] == "var" else F.lit(o[1])
-
-        a = s(args[0])
-        if name == "regex":
-            pat = str(args[1][1])
-            if len(args) == 3 and args[2][1] == "i":
-                pat = "(?i)" + pat
-            return a.rlike(pat)
-        b = s(args[1])
-        return {
-            "contains": a.contains(b),
-            "strstarts": a.startswith(b),
-            "strends": a.endswith(b),
-        }[name]
-    raise ValueError(f"unknown filter AST node {ast!r}")
-
-
-def _value_col(ast: tuple) -> "F.Column":
-    """Compile a BIND value-expression AST (parser.py:parse_bind_expr):
-    operands plus CONCAT/UCASE/LCASE/STRLEN, everything string-typed over
-    the plain-string term model (numeric literals keep their lexical
-    float form)."""
-    kind = ast[0]
-    if kind == "var":
-        return F.col(ast[1])
-    if kind == "lit":
-        return F.lit(ast[1]).cast("string") if ast[2] == "num" else F.lit(ast[1])
-    if kind == "fn":
-        _, name, args = ast
-        cols = [_value_col(a).cast("string") for a in args]
-        if name == "concat":
-            return F.concat(*cols)
-        if name == "ucase":
-            return F.upper(cols[0])
-        if name == "lcase":
-            return F.lower(cols[0])
-        if name == "strlen":
-            return F.length(cols[0])
-    raise ValueError(f"unknown bind AST node {ast!r}")
+def _visible(rels: Sequence[Rel]) -> List[str]:
+    """Non-internal columns of ``rels`` in first-appearance order."""
+    return list(dict.fromkeys(c for r in rels for c in r.cols if not _internal(c)))
 
 
 def eval_construct(
@@ -443,17 +497,22 @@ def eval_construct(
     where_tps: Sequence,
     template: Optional[Sequence] = None,
     filters: Sequence[tuple] = (),
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-    term_str: Callable[[Term], str] = _default_term_str,
+    **kw,
 ) -> DataFrame:
     """CONSTRUCT: instantiate a triple template once per WHERE-BGP solution
     and return the resulting GRAPH as a (subj, pred, obj) frame — the
     operator that makes the engine a graph REWRITER, not just a reader
     (materialized inference rules: body = WHERE, head = template).
+    ``template=None`` is the 'CONSTRUCT WHERE { ... }' shorthand (template
+    = the WHERE pattern).  Returns columns (subj_col, pred_col, obj_col).
+    """
+    q = _Sql(triples, **kw)
+    tpl = template if template is not None else where_tps
+    return q.run(_instantiate(q, _bgp(q, where_tps, filters=filters), tpl))
 
-    Semantics per SPARQL 1.1 section 10.2, all shapes distributed:
+
+def _instantiate(q: _Sql, sols: Rel, tpl: Sequence) -> Rel:
+    """Semantics per SPARQL 1.1 section 10.2, all shapes distributed:
       * template vars substitute their binding; a solution leaving any
         position unbound instantiates nothing for that template TP
         (dropped row, not a NULL triple);
@@ -462,85 +521,186 @@ def eval_construct(
         collision-safe at graph scale, and shared across template TPs of
         the same solution, so bnode-linked template structures stay
         connected;
-      * the output is an RDF GRAPH, i.e. a SET: one distinct shuffle at
-        the end, nothing else beyond the WHERE join plan itself.
-
-    ``template=None`` is the 'CONSTRUCT WHERE { ... }' shorthand (template
-    = the WHERE pattern).  Returns columns (subj_col, pred_col, obj_col).
+      * the output is an RDF GRAPH, i.e. a SET: one distinct at the end.
     """
-    tpl = [_coerce_tp(t) for t in (template if template is not None else where_tps)]
-    sols = eval_bgp(
-        triples, where_tps,
-        subj_col=subj_col, pred_col=pred_col, obj_col=obj_col, term_str=term_str,
-    )
-    for fx in filters:
-        sols = sols.filter(compile_filter(fx, sols.columns))
-    return _instantiate_template(sols, tpl, subj_col, pred_col, obj_col, term_str)
-
-
-def _instantiate_template(
-    sols: DataFrame,
-    tpl: Sequence[TriplePattern],
-    subj_col: str,
-    pred_col: str,
-    obj_col: str,
-    term_str: Callable[[Term], str],
-) -> DataFrame:
-    bound = set(sols.columns)
+    sols = q.cte(sols) if len(tpl) > 1 else sols
     # one deterministic bnode seed per solution: every bound var value
     # (md5 of the concatenated binding tuple; unit separator avoids
     # ("ab","c") == ("a","bc") seed collisions)
-    seed = F.md5(F.concat_ws("\x1f", *[F.col(c) for c in sorted(bound)]))
+    bound = sorted(sols.cols)
 
-    def pos(term: Term):
+    def pos(term: Term) -> str:
         v = _var_name(term)
         if v is None:
-            return F.lit(term_str(term))
+            return q.const(term)
         if term.kind == BNODE:
-            return F.concat(F.lit("_:"), F.substring(F.md5(F.concat(seed, F.lit(v))), 1, 16))
-        return F.col(v) if v in bound else F.lit(None).cast("string")
+            seed = f"md5(concat_ws({', '.join([q.lit(chr(31))] + [_id(c) for c in bound])}))"
+            return f"concat({q.lit('_:')}, substring(md5(concat({seed}, {q.lit(v)})), 1, 16))"
+        return _id(v) if v in bound else _NULL
 
-    parts = []
-    for tp in tpl:
-        parts.append(
-            sols.select(
-                pos(tp.s).alias(subj_col),
-                pos(tp.p).alias(pred_col),
-                pos(tp.o).alias(obj_col),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.na.drop("any").distinct()
+    s, p, o = q.s, q.p, q.o
+    arms = " UNION ALL ".join(
+        f"SELECT {pos(tp.s)} AS {s}, {pos(tp.p)} AS {p}, {pos(tp.o)} AS {o} FROM ({sols.sql})"
+        for tp in map(_coerce_tp, tpl)
+    )
+    return Rel(
+        f"SELECT DISTINCT {s}, {p}, {o} FROM ({arms})"
+        f" WHERE {s} IS NOT NULL AND {p} IS NOT NULL AND {o} IS NOT NULL",
+        q.cols,
+    )
 
 
-def _describe_nodes(
-    triples: DataFrame,
-    nodes: DataFrame,
-    subj_col: str,
-    pred_col: str,
-    obj_col: str,
-) -> DataFrame:
+def _describe(q: _Sql, nodes: Optional[Rel]) -> Rel:
     """Symmetric description of a node set: every triple with the node as
     subject or object — the standard SPARQL DESCRIBE rendition over this
-    engine's bnode-free plain-string graphs (no CBD bnode closure needed;
-    a full Concise Bounded Description would recurse into bnodes).  ONE
-    scan of the triple table (round 7: the old two-semi-join union read
-    it twice) with two broadcast hash left-joins against the DISTINCT
-    node set — the OR-match folds into a post-join filter, which keeps
-    both probes hashable (an OR join condition would degrade to a
-    nested-loop join); one distinct dedupes triples matched from both
-    ends."""
-    nd = nodes.select("node").distinct()
-    hit_s = nd.select(F.col("node").alias("__ds"))
-    hit_o = nd.select(F.col("node").alias("__do"))
-    return (
-        triples.join(F.broadcast(hit_s), triples[subj_col] == F.col("__ds"), "left")
-        .join(F.broadcast(hit_o), triples[obj_col] == F.col("__do"), "left")
-        .filter(F.col("__ds").isNotNull() | F.col("__do").isNotNull())
-        .select(subj_col, pred_col, obj_col)
-        .distinct()
+    engine's bnode-free plain-string graphs (no CBD bnode closure needed).
+    ONE scan of the triple table with two broadcast hash left-joins
+    against the DISTINCT node set; the OR-match is a post-join filter,
+    which keeps both probes hashable (an OR join condition would degrade
+    to a nested-loop join); one distinct dedupes triples matched from both
+    ends.  ``nodes=None`` (a DESCRIBE of vars bound nowhere) describes
+    nothing."""
+    s, p, o = q.s, q.p, q.o
+    if nodes is None:
+        return Rel(f"SELECT {s}, {p}, {o} FROM {q.triples} WHERE false", q.cols)
+    nd = q.cte(_distinct(nodes))
+    return Rel(
+        f"SELECT /*+ BROADCAST(_hs, _ho) */ DISTINCT _t.{s}, _t.{p}, _t.{o}"
+        f" FROM {q.triples} AS _t"
+        f" LEFT JOIN ({nd.sql}) AS _hs ON _t.{s} = _hs.node"
+        f" LEFT JOIN ({nd.sql}) AS _ho ON _t.{o} = _ho.node"
+        " WHERE _hs.node IS NOT NULL OR _ho.node IS NOT NULL",
+        q.cols,
+    )
+
+
+def _closure(q: _Sql, triples: DataFrame, r) -> Rel:
+    """Exact 'p+'/'p*'/'p?' between two endpoint terms: the reachable
+    (__s, __o) pairs, then the endpoint bindings — never the parser's
+    bounded expansion."""
+    from kgforge.operators.graph import path_closure
+
+    s, o = q.s, q.o
+    s_t, p_t, inv, kind, o_t = r.closure
+    if kind == "?":
+        # zero-or-one: single hops UNION the identity over every graph
+        # term (the zero-length arm binds all terms, section 9.3) — no
+        # iteration needed.  The zero-length arm holds for x = y
+        # INDEPENDENT of graph membership (section 9.3 evaluates it over
+        # the query's terms too), so a constant endpoint absent from the
+        # graph still contributes its identity solution
+        a, b = (o, s) if inv else (s, o)
+        arms = [
+            f"SELECT {a} AS __s, {b} AS __o FROM {q.triples} WHERE {q.p} = {q.const(p_t)}",
+            f"SELECT __t AS __s, __t AS __o FROM"
+            f" (SELECT explode(array({s}, {o})) AS __t FROM {q.triples})",
+        ]
+        for const in sorted({q.term_str(t) for t in (s_t, o_t) if _var_name(t) is None}):
+            c = q.lit(const)
+            arms.append(f"SELECT {c} AS __s, {c} AS __o")
+        reach = f"SELECT DISTINCT __s, __o FROM ({' UNION ALL '.join(arms)})"
+    else:
+        # ground-endpoint routing: a path endpoint is a known constant when
+        # the pattern term is ground OR a top-level conjunctive FILTER pins
+        # its var to a plain (non-numeric) literal; those closures run as a
+        # seeded frontier BFS over the constant's reachable set instead of
+        # the all-pairs closure filtered afterwards.  The filter stays in
+        # r.filters and re-applies later (idempotent on the seeded rows)
+        def _eq_pin(fx, var):
+            if fx[0] == "and":
+                return _eq_pin(fx[1], var) or _eq_pin(fx[2], var)
+            if fx[0] == "cmp" and fx[1] == "=":
+                for x, y in ((fx[2], fx[3]), (fx[3], fx[2])):
+                    if x[0] == "var" and x[1] == var and y[0] == "lit" and y[2] != "num":
+                        return str(y[1])
+            return None
+
+        def _const_of(term):
+            v = _var_name(term)
+            if v is None:
+                return q.term_str(term)
+            return next(
+                (c for c in (_eq_pin(fx, v) for fx in r.filters) if c is not None), None
+            )
+
+        subj_col, pred_col, obj_col = q.cols
+        reach_df = path_closure(
+            triples, ("^" if inv else "") + q.term_str(p_t),
+            subj_col=subj_col, pred_col=pred_col, obj_col=obj_col,
+            include_zero=(kind == "*"), src=_const_of(s_t), dst=_const_of(o_t),
+        )
+        reach = f"SELECT {s} AS __s, {o} AS __o FROM {q.frame(reach_df)}"
+    conds = [f"{c} = {q.const(t)}" for t, c in ((s_t, "__s"), (o_t, "__o")) if _var_name(t) is None]
+    sv, ov = _var_name(s_t), _var_name(o_t)
+    if sv is not None and sv == ov:
+        conds.append("__s = __o")
+    sel = ([("__s", sv)] if sv is not None else []) + (
+        [("__o", ov)] if ov is not None and ov != sv else []
+    )
+    if not sel:
+        sel = [("__s", "__s"), ("__o", "__o")]
+    where = " WHERE " + " AND ".join(conds) if conds else ""
+    return Rel(
+        f"SELECT {', '.join(f'{c} AS {_id(v)}' for c, v in sel)} FROM ({reach}){where}",
+        tuple(v for _, v in sel),
+    )
+
+
+def _path_alt(q: _Sql, r) -> Rel:
+    """'p|q' (or 'a/b|c') path: the exact union of its arm chains; each arm
+    becomes a fresh-var TP chain between the same endpoints."""
+    s_t, arms, o_t = r.path_alt
+    evars = list(dict.fromkeys(v for v in map(_var_name, (s_t, o_t)) if v is not None))
+    parts = []
+    for ai, steps in enumerate(arms):
+        nodes = [s_t] + [Term(VAR, f"_path_alt{ai}_{j}") for j in range(len(steps) - 1)] + [o_t]
+        arm_tps = [
+            TriplePattern(nodes[j + 1], p_t, nodes[j]) if inv
+            else TriplePattern(nodes[j], p_t, nodes[j + 1])
+            for j, (inv, p_t) in enumerate(steps)
+        ]
+        arm = _bgp(q, arm_tps, select=evars or None)
+        if not evars:
+            # fully-ground path (ASK-style): reduce each arm to an
+            # existence marker so the arms union on a common shape
+            arm = Rel(f"SELECT 1 AS __hit FROM ({arm.sql}) LIMIT 1", ("__hit",))
+        parts.append(arm)
+    return _union(parts, parts[0].cols)
+
+
+def _aggregate(q: _Sql, sols: Rel, r) -> Rel:
+    """Group/Aggregate: COUNT/SUM/AVG/MIN/MAX/SAMPLE/GROUP_CONCAT."""
+    aggs = []
+    for fn, var, dist, alias, *rest in r.aggregates:
+        v = _id(var) if var is not None else None
+        if fn == "COUNT":
+            e = "count(1)" if v is None else f"count({'DISTINCT ' if dist else ''}{v})"
+        elif fn == "SAMPLE":
+            # SAMPLE may return ANY value of the group (SPARQL 1.1 section
+            # 18.5.1.9) — min() is a legal, DETERMINISTIC choice, which also
+            # makes the result oracle-replayable
+            e = f"min({v})"
+        elif fn == "GROUP_CONCAT":
+            # element order is implementation-defined in the spec; this
+            # engine SORTS the group for determinism (and oracle replay via
+            # string_agg(... ORDER BY ...))
+            sep = q.lit(rest[0] if rest else " ")
+            e = f"array_join(array_sort({'collect_set' if dist else 'collect_list'}({v})), {sep})"
+        elif fn in ("SUM", "AVG"):
+            # numeric aggregation over the plain-string term model:
+            # non-numeric values become NULL and are skipped (the registered
+            # oracles replay the same try_cast)
+            e = f"{fn.lower()}(try_cast({v} AS DOUBLE))"
+        else:
+            e = f"{fn.lower()}({v})"
+        aggs.append(f"{e} AS {_id(alias)}")
+    keys = ", ".join(map(_id, r.group_by))
+    if not aggs:  # GROUP BY without aggregates: grouped projection
+        return _distinct(_project(sols, r.group_by))
+    group = f" GROUP BY {keys}" if keys else ""
+    return Rel(
+        f"SELECT {', '.join(([keys] if keys else []) + aggs)} FROM ({sols.sql}){group}",
+        tuple(r.group_by) + tuple(a[3] for a in r.aggregates),
     )
 
 
@@ -552,9 +712,10 @@ def answer_sparql(
     obj_col: str = "obj",
     term_str: Callable[[Term], str] = _default_term_str,
 ) -> DataFrame:
-    """Parse a SPARQL query string and answer it over the triple table —
-    the end-to-end surface (parser -> evaluator).  The evaluable subset
-    after the round-6 sessions:
+    """Parse a SPARQL query string and answer it over the triple table as
+    ONE parameterized ``spark.sql`` statement (see the module docstring):
+    no Spark job runs while the plan is built, except the exact closure's
+    own size measurement (graph.path_closure).  The evaluable subset:
 
       * forms: SELECT [DISTINCT], ASK (one (ask: boolean) row),
         CONSTRUCT (templates incl. deterministic fresh bnodes, 'CONSTRUCT
@@ -562,8 +723,8 @@ def answer_sparql(
         vars, '*');
       * BGPs with prefixes, 'a', predicate-object/object lists, bnodes,
         collections; single-arm '/' and '^' property paths; quantified
-        single-predicate paths 'p+'/'p*' (EXACT, via iterative doubling);
-        quantifier-free alternatives 'p|q' (arm-chain unions);
+        single-predicate paths 'p+'/'p*' (EXACT, via path_closure) and
+        'p?'; quantifier-free alternatives 'p|q' (arm-chain unions);
       * top-level OPTIONAL / UNION / MINUS / UNDEF-free VALUES / FILTER
         (comparisons, &&/||/!, REGEX/CONTAINS/STRSTARTS/STRENDS) /
         FILTER [NOT] EXISTS / BIND (CONCAT/UCASE/LCASE/STRLEN);
@@ -588,324 +749,93 @@ def answer_sparql(
             "demotion boundaries); use the eval_* combinators / "
             "path_closure for the demoted shapes"
         )
-    kw = dict(subj_col=subj_col, pred_col=pred_col, obj_col=obj_col, term_str=term_str)
-    base = r.base_tps if r.base_tps is not None else r.tps
+    q = _Sql(triples, subj_col, pred_col, obj_col, term_str)
+    spark = triples.sparkSession
+    iris = [(term_str(t),) for t in r.describe_terms if t.kind != VAR]
+    iri_rel = Rel(f"SELECT node FROM {q.frame(local_frame(spark, iris, 'node string'))}",
+                  ("node",)) if iris else None
     if r.query_form == "DESCRIBE" and not r.tps:
         # DESCRIBE <iri> ...: no WHERE — straight to the description
-        nodes = local_frame(
-            triples.sparkSession, [(term_str(t),) for t in r.describe_terms], "node string"
-        )
-        return _describe_nodes(triples, nodes, subj_col, pred_col, obj_col)
-    if (
-        r.query_form == "CONSTRUCT"
-        and not r.optionals
-        and not r.unions
-        # ADVICE r6 high: the early route joins the FLAT tps list
-        # conjunctively, which silently inverts MINUS / NOT EXISTS groups
-        # and drops BIND/VALUES — those shapes must take the generic path
-        # below, which compiles them correctly before instantiation
-        and not r.minuses
-        and not r.exists
-        and r.values is None
-        and not r.binds
-    ):
-        return eval_construct(
-            triples, base, template=r.template, filters=r.filters, **kw
-        )
-    # solution frame: either ONE top-level UNION chain (NULL-padded union
-    # of conjunctive arms, each with its arm-scoped filters), or the
-    # conjunctive base followed by each top-level OPTIONAL group
-    # LeftJoining in query order (its own filters pre-join, group-scoped —
-    # parser guarantees the scope); then the main group's FILTERs over the
-    # full frame (possibly-unbound vars: NULL comparisons drop rows,
-    # exactly SPARQL's unbound -> error -> eliminate)
+        return q.run(_describe(q, iri_rel))
+    # solution relation: the exact closure, a path alternative, ONE
+    # top-level UNION chain (NULL-padded union of conjunctive arms, each
+    # with its arm-scoped filters), or the conjunctive base; then VALUES,
+    # each top-level OPTIONAL group LeftJoining in query order (its own
+    # filters pre-join, group-scoped — parser guarantees the scope), MINUS,
+    # BIND, [NOT] EXISTS, and the main group's FILTERs over the full
+    # relation (possibly-unbound vars: NULL comparisons drop rows, exactly
+    # SPARQL's unbound -> error -> eliminate)
     if r.closure is not None:
-        # exact 'p+'/'p*': iterative doubling (graph.path_closure), then
-        # bind the endpoint terms — never the parser's bounded expansion
-        from kgforge.operators.graph import path_closure
-
-        s_t, p_t, inv, kind, o_t = r.closure
-        pred_name = ("^" if inv else "") + term_str(p_t)
-        if kind == "?":
-            # zero-or-one: single hops UNION the identity over every graph
-            # term (the zero-length arm binds all terms, section 9.3) —
-            # no iteration needed
-            a, b = (obj_col, subj_col) if inv else (subj_col, obj_col)
-            hops = (
-                triples.filter(F.col(pred_col) == term_str(p_t))
-                .select(F.col(a).alias("__s"), F.col(b).alias("__o"))
-                .distinct()
-            )
-            terms_df = (
-                # one scan of the triple derivation (round 7), not two
-                triples.select(
-                    F.explode(F.array(subj_col, obj_col)).alias("__t")
-                ).distinct()
-            )
-            reach = hops.unionByName(
-                terms_df.select(F.col("__t").alias("__s"), F.col("__t").alias("__o"))
-            ).distinct()
-            # ADVICE r6 low: the zero-length arm holds for x = y
-            # INDEPENDENT of graph membership (SPARQL 1.1 section 9.3
-            # evaluates it over the query's terms too), so a constant
-            # endpoint absent from the graph still contributes its
-            # identity solution
-            consts = sorted(
-                {term_str(t) for t in (s_t, o_t) if _var_name(t) is None}
-            )
-            if consts:
-                reach = reach.unionByName(
-                    local_frame(
-                        triples.sparkSession, [(c, c) for c in consts], "__s string, __o string"
-                    )
-                ).distinct()
-        else:
-            # ground-endpoint routing (round 7, VERDICT r6 item 1): a path
-            # endpoint is a known constant when the pattern term is ground
-            # OR a top-level conjunctive FILTER pins its var to a plain
-            # (non-numeric) literal; those closures run as a seeded
-            # frontier BFS over the constant's reachable set instead of
-            # the all-pairs closure filtered afterwards.  The filter stays
-            # in r.filters and re-applies below (idempotent on the seeded
-            # rows), so semantics are unchanged.
-            def _eq_pin(fx, var):
-                if fx[0] == "and":
-                    return _eq_pin(fx[1], var) or _eq_pin(fx[2], var)
-                if fx[0] == "cmp" and fx[1] == "=":
-                    for x, y in ((fx[2], fx[3]), (fx[3], fx[2])):
-                        if (
-                            x[0] == "var" and x[1] == var
-                            and y[0] == "lit" and y[2] != "num"
-                        ):
-                            return str(y[1])
-                return None
-
-            def _const_of(term):
-                v = _var_name(term)
-                if v is None:
-                    return term_str(term)
-                for fx in r.filters:
-                    c = _eq_pin(fx, v)
-                    if c is not None:
-                        return c
-                return None
-
-            reach = path_closure(
-                triples, pred_name,
-                subj_col=subj_col, pred_col=pred_col, obj_col=obj_col,
-                include_zero=(kind == "*"),
-                src=_const_of(s_t), dst=_const_of(o_t),
-            ).select(F.col(subj_col).alias("__s"), F.col(obj_col).alias("__o"))
-        for term, col in ((s_t, "__s"), (o_t, "__o")):
-            if _var_name(term) is None:
-                reach = reach.filter(F.col(col) == term_str(term))
-        sv, ov = _var_name(s_t), _var_name(o_t)
-        if sv is not None and sv == ov:
-            reach = reach.filter(F.col("__s") == F.col("__o"))
-        sel = []
-        if sv is not None:
-            sel.append(F.col("__s").alias(sv))
-        if ov is not None and ov != sv:
-            sel.append(F.col("__o").alias(ov))
-        sols = reach.select(*sel) if sel else reach
+        sols = _closure(q, triples, r)
     elif r.path_alt is not None:
-        # 'p|q' (or 'a/b|c') path: the exact union of its arm chains; each
-        # arm becomes a fresh-var TP chain between the same endpoints
-        s_t, arms, o_t = r.path_alt
-        evars = []
-        for t_ in (s_t, o_t):
-            v = _var_name(t_)
-            if v is not None and v not in evars:
-                evars.append(v)
-        parts = []
-        for ai, steps in enumerate(arms):
-            nodes = [s_t] + [
-                Term(VAR, f"_path_alt{ai}_{j}") for j in range(len(steps) - 1)
-            ] + [o_t]
-            arm_tps = []
-            for j, (inv, p_t) in enumerate(steps):
-                a, b = nodes[j], nodes[j + 1]
-                arm_tps.append(
-                    TriplePattern(b, p_t, a) if inv else TriplePattern(a, p_t, b)
-                )
-            arm = eval_bgp(triples, arm_tps, select=evars or None, **kw)
-            if not evars:
-                # fully-ground path (ASK-style): reduce each arm to an
-                # existence marker so the arms union on a common shape
-                arm = arm.limit(1).select(F.lit(1).alias("__hit"))
-            parts.append(arm)
-        sols = parts[0]
-        for part in parts[1:]:
-            sols = sols.unionByName(part)
+        sols = _path_alt(q, r)
     elif r.unions:
-        allvars: List[str] = []
-        for arm_tps, _ in r.unions:
-            for v in _bgp_vars(arm_tps):
-                if v not in allvars:
-                    allvars.append(v)
-        parts = []
-        for arm_tps, arm_filters in r.unions:
-            arm = eval_bgp(triples, arm_tps, **kw)
-            for fx in arm_filters:
-                arm = arm.filter(compile_filter(fx, arm.columns))
-            parts.append(
-                arm.select(
-                    *[
-                        (F.col(v) if v in arm.columns else F.lit(None).cast("string")).alias(v)
-                        for v in allvars
-                    ]
-                )
-            )
-        sols = parts[0]
-        for part in parts[1:]:
-            sols = sols.unionByName(part)
+        arms = [_bgp(q, tps, filters=fs) for tps, fs in r.unions]
+        sols = _union(arms, _visible(arms))
     else:
-        sols = eval_bgp(triples, base, **kw)
+        sols = _bgp(q, r.base_tps if r.base_tps is not None else r.tps)
     if r.values is not None:
         # inline VALUES table: the parser guarantees its vars are bound in
         # the base/every arm, so a plain inner equi-join is exact SPARQL
-        # Join(group, data) — and Catalyst broadcasts the literal rows
+        # Join(group, data) — with the literal rows broadcast
         vvars, vrows = r.values
-        inline = local_frame(
-            triples.sparkSession, vrows, ", ".join(f"{v} string" for v in vvars)
-        )
-        sols = sols.join(F.broadcast(inline), on=list(vvars))
-    for opt_tps, opt_filters in r.optionals:
-        opt = eval_bgp(triples, opt_tps, **kw)
-        for fx in opt_filters:
-            opt = opt.filter(compile_filter(fx, opt.columns))
-        shared = sorted(set(sols.columns) & set(opt.columns))
-        if shared:
-            sols = sols.join(opt, on=shared, how="left")
-        else:
-            k = "__optk"
-            sols = (
-                sols.withColumn(k, F.lit(1))
-                .join(opt.withColumn(k, F.lit(1)), on=k, how="left")
-                .drop(k)
-            )
-    for m_tps, m_filters in r.minuses:
-        m = eval_bgp(triples, m_tps, **kw)
-        for fx in m_filters:
-            m = m.filter(compile_filter(fx, m.columns))
-        shared = sorted(set(sols.columns) & set(m.columns))
-        if shared:  # no shared vars: MINUS keeps everything (SPARQL 8.3)
-            sols = sols.join(m.select(*shared).distinct(), on=shared, how="left_anti")
+        inline = local_frame(spark, vrows, ", ".join(f"{v} string" for v in vvars))
+        sols = _join(sols, Rel(f"SELECT {_sel(vvars)} FROM {q.frame(inline)}", tuple(vvars)),
+                     "INNER", list(vvars), "BROADCAST")
+    for tps, fs in r.optionals:
+        sols = _leftjoin(sols, _bgp(q, tps, filters=fs))
+    for tps, fs in r.minuses:
+        sols = _minus(sols, _bgp(q, tps, filters=fs))
     for expr, bvar in r.binds:
-        sols = sols.withColumn(bvar, _value_col(expr))
-    for neg, ex_tps, ex_filters in r.exists:
-        pat = eval_bgp(triples, ex_tps, **kw)
-        for fx in ex_filters:
-            pat = pat.filter(compile_filter(fx, pat.columns))
-        shared = sorted(set(sols.columns) & set(pat.columns))
+        e = _value_expr(q, expr)
+        cols = sols.cols + (() if bvar in sols.cols else (bvar,))
+        sel = ", ".join(f"{e} AS {_id(c)}" if c == bvar else _id(c) for c in cols)
+        sols = Rel(f"SELECT {sel} FROM ({sols.sql})", cols)
+    for neg, tps, fs in r.exists:
+        pat = _bgp(q, tps, filters=fs)
+        shared = sorted(set(sols.cols) & set(pat.cols))
         if shared:
-            how = "left_anti" if neg else "left_semi"
-            sols = sols.join(pat.select(*shared).distinct(), on=shared, how=how)
+            how = "LEFT ANTI" if neg else "LEFT SEMI"
+            sols = _join(sols, _distinct(_project(pat, shared)), how, shared)
         else:
             # uncorrelated pattern: a GLOBAL existence gate over all rows
-            k = "__exm"
-            marker = pat.limit(1).select(F.lit(1).alias(k))
-            sols = sols.join(F.broadcast(marker), how="left")
-            sols = sols.filter(F.col(k).isNull() if neg else F.col(k).isNotNull()).drop(k)
-    for fx in r.filters:
-        if _filter_ast_vars(fx) - set(sols.columns):
-            # ADVICE r6 low: a top-level FILTER referencing a var that is
-            # only bound inside a MINUS/EXISTS span is absent from the
-            # solution frame; SPARQL's unbound -> error -> eliminate
-            # semantics make every solution drop (constant-false), where
-            # compiling the column would raise AnalysisException
-            sols = sols.filter(F.lit(False))
-        else:
-            sols = sols.filter(compile_filter(fx, sols.columns))
+            marker = Rel(f"SELECT 1 AS __exm FROM ({pat.sql}) LIMIT 1", ("__exm",))
+            gated = _join(sols, marker, "LEFT", [], "BROADCAST")
+            test = "IS NULL" if neg else "IS NOT NULL"
+            sols = Rel(f"SELECT {_sel(sols.cols)} FROM ({gated.sql}) WHERE __exm {test}", sols.cols)
+    sols = _filtered(q, sols, r.filters)
     if r.query_form == "CONSTRUCT":
-        return _instantiate_template(
-            sols, [_coerce_tp(t) for t in (r.template if r.template is not None else r.tps)],
-            subj_col, pred_col, obj_col, term_str,
-        )
+        return q.run(_instantiate(q, sols, r.template if r.template is not None else r.tps))
     if r.query_form == "ASK":
-        return sols.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
+        one = f"SELECT {_sel(sols.cols)} FROM ({sols.sql}) LIMIT 1"
+        return q.run(Rel(f"SELECT count(1) > 0 AS ask FROM ({one})", ("ask",)))
     if r.query_form == "DESCRIBE":
         dvars = [t.value for t in r.describe_terms if t.kind == VAR]
         if r.describe_star:
-            dvars = [c for c in sols.columns if not _internal(c)]
-        parts = [
-            sols.select(F.col(v).alias("node")).distinct()
-            for v in dvars
-            if v in sols.columns
-        ]
-        iris = [(term_str(t),) for t in r.describe_terms if t.kind != VAR]
-        if iris:
-            parts.append(
-                local_frame(triples.sparkSession, iris, "node string")
-            )
-        if not parts:
-            # ADVICE r6 medium: DESCRIBE of a var bound nowhere in the
-            # WHERE clause — SPARQL semantics are an empty description,
-            # not an IndexError
-            return local_frame(
-                triples.sparkSession,
-                [],
-                f"{subj_col} string, {pred_col} string, {obj_col} string",
-            )
-        nodes = parts[0]
-        for part in parts[1:]:
-            nodes = nodes.unionByName(part)
-        return _describe_nodes(triples, nodes.distinct(), subj_col, pred_col, obj_col)
+            dvars = [c for c in sols.cols if not _internal(c)]
+        dvars = [v for v in dvars if v in sols.cols]
+        if len(dvars) > 1:
+            sols = q.cte(sols)
+        parts = [Rel(f"SELECT {_id(v)} AS node FROM ({sols.sql})", ("node",)) for v in dvars]
+        parts += [iri_rel] if iri_rel else []
+        # a DESCRIBE of a var bound nowhere in the WHERE clause describes
+        # nothing: an empty description, not an error
+        return q.run(_describe(q, _union(parts, ("node",)) if parts else None))
     # SELECT tail, in the spec's operation order: Group/Aggregate ->
     # OrderBy -> Projection -> Distinct -> Slice.  (With DISTINCT the
     # parser restricted sort keys to projected vars, so sorting after the
-    # distinct shuffle is equivalent and keeps the order intact.)
+    # distinct is equivalent and keeps the order intact.)
     if r.aggregates or r.group_by:
-        aggs = []
-        for fn, var, dist, alias, *rest in r.aggregates:
-            sep = rest[0] if rest else " "
-            if fn == "COUNT" and var is None:
-                e = F.count(F.lit(1))
-            elif fn == "COUNT":
-                e = F.count_distinct(F.col(var)) if dist else F.count(var)
-            elif fn == "SAMPLE":
-                # SAMPLE may return ANY value of the group (SPARQL 1.1
-                # section 18.5.1.9) — min() is a legal, DETERMINISTIC
-                # choice, which also makes the result oracle-replayable
-                e = F.min(var)
-            elif fn == "GROUP_CONCAT":
-                # element order is implementation-defined in the spec;
-                # this engine SORTS the group for determinism (and oracle
-                # replay via string_agg(... ORDER BY ...))
-                vals_col = F.collect_set(var) if dist else F.collect_list(var)
-                e = F.array_join(F.array_sort(vals_col), sep)
-            else:
-                c = F.col(var)
-                if fn in ("SUM", "AVG"):
-                    # numeric aggregation over the plain-string term model:
-                    # non-numeric values become NULL and are skipped (the
-                    # registered oracles replay the same try_cast)
-                    c = c.try_cast("double")
-                e = {"SUM": F.sum, "AVG": F.avg, "MIN": F.min, "MAX": F.max}[fn](c)
-            aggs.append(e.alias(alias))
-        if aggs:
-            sols = sols.groupBy(*[F.col(g) for g in r.group_by]).agg(*aggs)
-        else:  # GROUP BY without aggregates: grouped projection
-            sols = sols.select(*r.group_by).distinct()
-
-    def _order(df):
-        return df.orderBy(
-            *[(F.col(v).desc() if d else F.col(v).asc()) for v, d in r.order_by]
-        ) if r.order_by else df
-
-    if not r.distinct:
-        sols = _order(sols)
-    if r.select_vars is not None:
-        sols = sols.select(
-            *[
-                (F.col(v) if v in sols.columns else F.lit(None).cast("string")).alias(v)
-                for v in r.select_vars
-            ]
-        )
-    if r.distinct:
-        sols = _order(sols.distinct())
-    if r.offset is not None:
-        sols = sols.offset(r.offset)
-    if r.limit is not None:
-        sols = sols.limit(r.limit)
-    return sols
+        sols = _aggregate(q, sols, r)
+    keys = ", ".join(f"{_id(v)} {'DESC' if d else 'ASC'}" for v, d in r.order_by)
+    order = f" ORDER BY {keys}" if keys else ""
+    if not r.distinct and order:
+        sols = Rel(f"SELECT {_sel(sols.cols)} FROM ({sols.sql}){order}", sols.cols)
+    sols = _tail(sols, r.select_vars, r.distinct)
+    if r.distinct and order:
+        sols = Rel(f"SELECT {_sel(sols.cols)} FROM ({sols.sql}){order}", sols.cols)
+    if r.limit is not None or r.offset is not None:
+        limit = f" LIMIT {int(r.limit)}" if r.limit is not None else ""
+        offset = f" OFFSET {int(r.offset)}" if r.offset is not None else ""
+        sols = Rel(f"SELECT {_sel(sols.cols)} FROM ({sols.sql}){limit}{offset}", sols.cols)
+    return q.run(sols)

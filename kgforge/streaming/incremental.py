@@ -376,7 +376,7 @@ def run_incremental_bgp_view(
     """
     import os
 
-    from kgforge.sparql.eval import compile_filter, eval_bgp, eval_bgp_delta
+    from kgforge.sparql.eval import eval_bgp, eval_bgp_delta
     from kgforge.sparql.parser import parse_query
 
     r = parse_query(query_text)
@@ -415,11 +415,6 @@ def run_incremental_bgp_view(
         state_dir.rstrip("/") + "_view_epochs.txt", checkpoint_dir
     )
 
-    def _filtered(df: DataFrame) -> DataFrame:
-        for fx in filters:
-            df = df.filter(compile_filter(fx, df.columns))
-        return df
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         done = ledger.done()
         if ledger.key(epoch_id) in done:
@@ -427,11 +422,13 @@ def run_incremental_bgp_view(
         batch_df = batch_df.localCheckpoint(eager=True)  # one stable read
         first = not os.path.exists(triples_dir)
         if first:
-            delta = eval_bgp(batch_df, tps, select=select)
+            delta = eval_bgp(batch_df, tps, select=select, filters=filters)
         else:
-            old = spark.read.parquet(triples_dir)
-            delta = eval_bgp_delta(old, batch_df, tps, select=select)
-        _filtered(delta).write.mode("append").parquet(solutions_dir)
+            # read through the micro-batch's session: the staircase is one
+            # SQL statement over both frames
+            old = batch_df.sparkSession.read.parquet(triples_dir)
+            delta = eval_bgp_delta(old, batch_df, tps, select=select, filters=filters)
+        delta.write.mode("append").parquet(solutions_dir)
         batch_df.write.mode("append").parquet(triples_dir)
         ledger.mark(done, epoch_id)
 

@@ -124,3 +124,27 @@ def test_no_python_stage(spark, nt_dir):
     ):
         plan = physical_plan(df, mode="formatted")
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_shards_readable_by_standard_tools(spark, tmpdir_path):
+    # interchange output: the default shards are plain text that open()
+    # reads; gzip is the opt-in codec, and gzip.open() reads its shards
+    import glob
+    import gzip
+
+    rows = [(f"e{i}", "linked_to", f"e{i + 1}") for i in range(20)]
+    df = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    want = sorted(r.value for r in ntriples_lines(df, base_iri="http://kg.local/").collect())
+    for codec, ext, opener in ((None, ".txt", open), ("gzip", ".txt.gz", gzip.open)):
+        out = os.path.join(tmpdir_path, f"nt_{codec}")
+        kw = {} if codec is None else {"compression": codec}
+        write_ntriples(df, out, base_iri="http://kg.local/", **kw)
+        shards = glob.glob(os.path.join(out, "part-*"))
+        assert shards and all(s.endswith(ext) for s in shards), shards
+        got = []
+        for s in shards:
+            with opener(s, "rt", encoding="utf-8") as fh:
+                got += fh.read().splitlines()
+        assert sorted(got) == want
+        back = read_ntriples(spark, out, strip_base="http://kg.local/")
+        assert sorted((r.subj, r.pred, r.obj) for r in back.collect()) == sorted(rows)
