@@ -118,7 +118,9 @@ def main(argv: Optional[List[str]] = None) -> int:
     section = "per_layer" if args.trace else "end_to_end"
     better = {m["name"]: m["better"] for m in bench[section]}
     trees = {"base": args.base, "change": args.change}
-    pairs = []
+    path = os.path.join(args.out_dir, f"BENCH_ab_{args.tag}.json")
+    pairs: List[dict] = []
+    report: Dict[str, dict] = {}
     for i, seed in enumerate(parse_seeds(args.seeds)):
         if args.trace:
             order = ["base", "change", "change", "base"]
@@ -134,7 +136,10 @@ def main(argv: Optional[List[str]] = None) -> int:
         for k in range(len(runs["base"])):
             pairs.append({"seed": seed, "first": order[0], "base": runs["base"][k],
                           "change": runs["change"][k]})
-    report = compare(pairs, better)
+        # rewritten after every seed, so an interrupted session keeps its runs
+        report = compare(pairs, better)
+        with open(path, "w") as fh:
+            json.dump({"args": vars(args), "metrics": report, "pairs": pairs}, fh, indent=1)
     print(f"\n{'metric':40s} {'wins':>6s} {'base median [q1,q3]':>32s} "
           f"{'change median [q1,q3]':>32s} {'ratio':>7s} claim")
     for name, m in report.items():
@@ -146,9 +151,6 @@ def main(argv: Optional[List[str]] = None) -> int:
     for p in pairs:
         print(f"  seed {p['seed']} first={p['first']:6s} "
               f"{p['base'].get('host_steal_frac')} / {p['change'].get('host_steal_frac')}")
-    path = os.path.join(args.out_dir, f"BENCH_ab_{args.tag}.json")
-    with open(path, "w") as fh:
-        json.dump({"args": vars(args), "metrics": report, "pairs": pairs}, fh, indent=1)
     print(f"\nwrote {path}")
     failed = [r for p in pairs for r in (p["base"], p["change"]) if "error" in r or r["failed"]]
     return 1 if failed else 0
