@@ -1,18 +1,21 @@
 """Paired A/B of two kgforge checkouts over one perfbench workload.
 
     python3 bench_tools/ab.py --base ../parent --change . --workload serve \\
-        --seeds 401-410 --seconds 12 --tag serve_sql
+        --seeds 401-410 --tag serve_sql
 
 Each seed is one pair: the base checkout and the change checkout each run
-``perfbench/run.py`` once, in their own directory, and the side that runs
+``perfbench/run.py`` once, in their own directory, for the ``run_seconds``
+that ``BENCHMARK.json`` sets, and the side that runs
 first alternates from pair to pair, so a drift in host load during the
 session falls on both sides alike.  ``--trace 1`` runs each seed as
 base, change, change, base instead and compares the per-layer metrics.
 
 Per metric the report gives the change's wins over the base in the pairs,
 both sides' medians and quartiles, and the claim-rule verdict: the change
-wins at least 9 of every 10 pairs, and its median is better than the
-base's by more than the base's interquartile range.  Every run's
+wins at least 9 of every 10 pairs run, its median is better than the
+base's by more than the base's interquartile range, and it has no more
+failed runs than the base.  A change run that errored, timed out, was
+incorrect or had a failed operation is a loss in its pair.  Every run's
 ``host_steal_frac`` (the CPU share the hypervisor gave other guests) is
 listed with it.  The full record goes to ``BENCH_ab_<tag>.json``.
 
@@ -30,6 +33,8 @@ import sys
 import time
 from typing import Dict, List, Optional
 
+RUN_TIMEOUT_S = 900  # per perfbench run
+
 
 def parse_seeds(text: str) -> List[int]:
     """'401-405,409' -> [401, 402, 403, 404, 405, 409]."""
@@ -40,13 +45,13 @@ def parse_seeds(text: str) -> List[int]:
     return out
 
 
-def run_one(tree: str, workload: str, seed: int, seconds: float, trace: int, timeout: float) -> dict:
+def run_one(tree: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
     """One perfbench run in ``tree``: its result line, info line and wall."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     t0 = time.perf_counter()
     try:
-        p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True, timeout=timeout)
+        p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True, timeout=RUN_TIMEOUT_S)
         out, code = p.stdout, p.returncode
     except subprocess.TimeoutExpired as exc:
         out, code = exc.stdout or "", "timeout"
@@ -74,28 +79,37 @@ def quartiles(xs: List[float]) -> List[float]:
     return [round(v, 6) for v in q]
 
 
+def failed(run: dict) -> bool:
+    """A run that errored, timed out, was incorrect or had a failed operation."""
+    return "metrics" not in run or run.get("correct") is False or bool(run.get("failed"))
+
+
 def compare(pairs: List[dict], better: Dict[str, str]) -> Dict[str, dict]:
-    """Per metric: wins, medians, quartiles and the claim-rule verdict."""
-    ok = [p for p in pairs if "metrics" in p["base"] and "metrics" in p["change"]]
+    """Per metric: wins over all pairs run, medians, quartiles and the claim-rule verdict."""
+    n_failed = {side: sum(failed(p[side]) for p in pairs) for side in ("base", "change")}
     out = {}
     for name, direction in better.items():
-        rows = [(p["base"]["metrics"].get(name), p["change"]["metrics"].get(name)) for p in ok]
-        rows = [(b, c) for b, c in rows if b is not None and c is not None]
-        if not rows:
+        base = [p["base"]["metrics"][name] for p in pairs if name in p["base"].get("metrics", {})]
+        change = [p["change"]["metrics"][name] for p in pairs if name in p["change"].get("metrics", {})]
+        if not base or not change:
             continue
         sign = 1 if direction == "lower" else -1
-        base, change = [b for b, _ in rows], [c for _, c in rows]
+        wins = 0
+        for p in pairs:
+            b, c = p["base"].get("metrics", {}).get(name), p["change"].get("metrics", {}).get(name)
+            wins += not failed(p["change"]) and b is not None and c is not None and sign * (b - c) > 0
         qb, qc = quartiles(base), quartiles(change)
-        wins = sum(sign * (b - c) > 0 for b, c in rows)
         gain = sign * (qb[1] - qc[1])  # > 0: the change's median is better
         iqr = qb[2] - qb[0]
         out[name] = {
-            "better": direction, "pairs": len(rows), "wins": wins,
+            "better": direction, "pairs": len(pairs), "wins": wins,
+            "failed_runs": n_failed,
             "base_median": qb[1], "change_median": qc[1],
             "base_quartiles": [qb[0], qb[2]], "change_quartiles": [qc[0], qc[2]],
             "ratio": round(qc[1] / qb[1], 4) if qb[1] else None,
             "median_gain": round(gain, 6), "base_iqr": round(iqr, 6),
-            "claim": wins >= 0.9 * len(rows) and gain > iqr,
+            "claim": (wins >= 0.9 * len(pairs) and gain > iqr
+                      and n_failed["change"] <= n_failed["base"]),
         }
     return out
 
@@ -106,11 +120,8 @@ def main(argv: Optional[List[str]] = None) -> int:
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 401-410 or 7,9")
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--tag", required=True)
-    ap.add_argument("--timeout", type=float, default=900, help="per run, seconds")
-    ap.add_argument("--out-dir", default=".")
     args = ap.parse_args(argv)
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
@@ -118,7 +129,7 @@ def main(argv: Optional[List[str]] = None) -> int:
     section = "per_layer" if args.trace else "end_to_end"
     better = {m["name"]: m["better"] for m in bench[section]}
     trees = {"base": args.base, "change": args.change}
-    path = os.path.join(args.out_dir, f"BENCH_ab_{args.tag}.json")
+    path = f"BENCH_ab_{args.tag}.json"
     pairs: List[dict] = []
     report: Dict[str, dict] = {}
     for i, seed in enumerate(parse_seeds(args.seeds)):
@@ -128,7 +139,7 @@ def main(argv: Optional[List[str]] = None) -> int:
             order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
         runs: Dict[str, List[dict]] = {"base": [], "change": []}
         for side in order:
-            rec = run_one(trees[side], args.workload, seed, args.seconds, args.trace, args.timeout)
+            rec = run_one(trees[side], args.workload, seed, bench["run_seconds"], args.trace)
             runs[side].append(rec)
             print(f"ab: seed {seed} {side:6s} wall {rec['wall_s']:6.1f}s "
                   f"steal {rec.get('host_steal_frac', 'n/a')} "
@@ -147,13 +158,14 @@ def main(argv: Optional[List[str]] = None) -> int:
         c = f"{m['change_median']:.4g} [{m['change_quartiles'][0]:.4g}, {m['change_quartiles'][1]:.4g}]"
         print(f"{name:40s} {m['wins']:>3d}/{m['pairs']:<2d} {b:>32s} {c:>32s} "
               f"{m['ratio'] if m['ratio'] is not None else '-':>7} {'yes' if m['claim'] else 'no'}")
-    print("\nhost_steal_frac per run (base / change):")
+    bad = {side: sum(failed(p[side]) for p in pairs) for side in ("base", "change")}
+    print(f"\nfailed runs: base {bad['base']}, change {bad['change']} of {len(pairs)}")
+    print("host_steal_frac per run (base / change):")
     for p in pairs:
         print(f"  seed {p['seed']} first={p['first']:6s} "
               f"{p['base'].get('host_steal_frac')} / {p['change'].get('host_steal_frac')}")
     print(f"\nwrote {path}")
-    failed = [r for p in pairs for r in (p["base"], p["change"]) if "error" in r or r["failed"]]
-    return 1 if failed else 0
+    return 1 if bad["base"] or bad["change"] else 0
 
 
 if __name__ == "__main__":

@@ -1,6 +1,7 @@
 """bench_tools/ab.py: seed lists and the per-metric claim rule (wins in
-at least 9 of 10 pairs, ties counting for neither, and a median gain
-larger than the base's interquartile range)."""
+at least 9 of 10 pairs run, ties counting for neither, a median gain
+larger than the base's interquartile range, and no more failed runs than
+the base)."""
 
 import os
 import sys
@@ -43,7 +44,23 @@ def test_claim_rule():
     assert m["rows_per_s"]["wins"] == 10 and m["rows_per_s"]["claim"]
 
 
-def test_failed_runs_are_left_out_of_the_comparison():
-    pairs = _pairs([0.3] * 3, [0.2] * 3)
+def test_failed_change_runs_count_as_losses():
+    # three of ten change runs errored, timed out or were incorrect: the
+    # seven clean wins are counted over all ten pairs, below the rule
+    base = [0.30, 0.31, 0.29, 0.32, 0.30, 0.31, 0.33, 0.30, 0.29, 0.31]
+    pairs = _pairs(base, [b - 0.1 for b in base])
     pairs[1]["change"] = {"error": "timeout"}
-    assert ab.compare(pairs, {"read_s_p50": "lower"})["read_s_p50"]["pairs"] == 2
+    pairs[4]["change"] = {"error": "Traceback"}
+    pairs[7]["change"]["correct"] = False
+    m = ab.compare(pairs, {"read_s_p50": "lower"})["read_s_p50"]
+    assert m["pairs"] == 10 and m["wins"] == 7 and not m["claim"]
+    assert m["failed_runs"] == {"base": 0, "change": 3}
+
+    # one failed change run still allows 9 of 10, but not more failures
+    # than the base had
+    pairs = _pairs(base, [b - 0.1 for b in base])
+    pairs[3]["change"]["failed"] = 2
+    m = ab.compare(pairs, {"read_s_p50": "lower"})["read_s_p50"]
+    assert m["wins"] == 9 and not m["claim"]
+    pairs[5]["base"]["correct"] = False
+    assert ab.compare(pairs, {"read_s_p50": "lower"})["read_s_p50"]["claim"]
