@@ -15,7 +15,10 @@ both sides' medians and quartiles, and the claim-rule verdict: the change
 wins at least 9 of every 10 pairs run, its median is better than the
 base's by more than the base's interquartile range, and it has no more
 failed runs than the base.  A change run that errored, timed out, was
-incorrect or had a failed operation is a loss in its pair.  Every run's
+incorrect or had a failed operation is a loss in its pair.  For every
+metric ``BENCHMARK.json`` gives a ``bound``, the report also gives the
+no-regression verdict (``verdict()``): 'within bound', 'unresolved' when
+the base's own spread is wider than the bound, or 'worse'.  Every run's
 ``host_steal_frac`` (the CPU share the hypervisor gave other guests) is
 listed with it.  The full record goes to ``BENCH_ab_<tag>.json``.
 
@@ -84,8 +87,28 @@ def failed(run: dict) -> bool:
     return "metrics" not in run or run.get("correct") is False or bool(run.get("failed"))
 
 
-def compare(pairs: List[dict], better: Dict[str, str]) -> Dict[str, dict]:
-    """Per metric: wins over all pairs run, medians, quartiles and the claim-rule verdict."""
+def verdict(base: List[float], change: List[float], sign: int, bound: float) -> str:
+    """The no-regression verdict for one metric under its relative ``bound``.
+
+    'worse': the change's median is worse than the base's by more than the
+    bound.  'unresolved': the base's own interquartile range is wider than
+    the bound (as a share of its median), so a shift within the bound
+    cannot be told from noise -- unless every change run beats every base
+    run.  'within bound' otherwise."""
+    qb, qc = quartiles(base), quartiles(change)
+    shift = sign * (qc[1] - qb[1])  # > 0: the change's median is worse
+    scale = abs(qb[1])
+    if shift > bound * scale:
+        return "worse"
+    if qb[2] - qb[0] > bound * scale and not all(sign * (b - c) > 0 for b in base for c in change):
+        return "unresolved"
+    return "within bound"
+
+
+def compare(pairs: List[dict], better: Dict[str, str],
+            bounds: Optional[Dict[str, float]] = None) -> Dict[str, dict]:
+    """Per metric: wins over all pairs run, medians, quartiles, the claim-rule
+    verdict and, for the metrics ``bounds`` names, the no-regression verdict."""
     n_failed = {side: sum(failed(p[side]) for p in pairs) for side in ("base", "change")}
     out = {}
     for name, direction in better.items():
@@ -111,6 +134,8 @@ def compare(pairs: List[dict], better: Dict[str, str]) -> Dict[str, dict]:
             "claim": (wins >= 0.9 * len(pairs) and gain > iqr
                       and n_failed["change"] <= n_failed["base"]),
         }
+        if bounds and name in bounds:
+            out[name]["verdict"] = verdict(base, change, sign, bounds[name])
     return out
 
 
@@ -128,6 +153,7 @@ def main(argv: Optional[List[str]] = None) -> int:
         bench = json.load(fh)
     section = "per_layer" if args.trace else "end_to_end"
     better = {m["name"]: m["better"] for m in bench[section]}
+    bounds = {m["name"]: m["bound"] for m in bench[section] if "bound" in m}
     trees = {"base": args.base, "change": args.change}
     path = f"BENCH_ab_{args.tag}.json"
     pairs: List[dict] = []
@@ -148,16 +174,17 @@ def main(argv: Optional[List[str]] = None) -> int:
             pairs.append({"seed": seed, "first": order[0], "base": runs["base"][k],
                           "change": runs["change"][k]})
         # rewritten after every seed, so an interrupted session keeps its runs
-        report = compare(pairs, better)
+        report = compare(pairs, better, bounds)
         with open(path, "w") as fh:
             json.dump({"args": vars(args), "metrics": report, "pairs": pairs}, fh, indent=1)
     print(f"\n{'metric':40s} {'wins':>6s} {'base median [q1,q3]':>32s} "
-          f"{'change median [q1,q3]':>32s} {'ratio':>7s} claim")
+          f"{'change median [q1,q3]':>32s} {'ratio':>7s} claim verdict")
     for name, m in report.items():
         b = f"{m['base_median']:.4g} [{m['base_quartiles'][0]:.4g}, {m['base_quartiles'][1]:.4g}]"
         c = f"{m['change_median']:.4g} [{m['change_quartiles'][0]:.4g}, {m['change_quartiles'][1]:.4g}]"
         print(f"{name:40s} {m['wins']:>3d}/{m['pairs']:<2d} {b:>32s} {c:>32s} "
-              f"{m['ratio'] if m['ratio'] is not None else '-':>7} {'yes' if m['claim'] else 'no'}")
+              f"{m['ratio'] if m['ratio'] is not None else '-':>7} {'yes' if m['claim'] else 'no':5s}"
+              f" {m.get('verdict', '-')}")
     bad = {side: sum(failed(p[side]) for p in pairs) for side in ("base", "change")}
     print(f"\nfailed runs: base {bad['base']}, change {bad['change']} of {len(pairs)}")
     print("host_steal_frac per run (base / change):")

@@ -155,12 +155,13 @@ def pagerank(
     return ranks.select(F.col("id").alias("node"), F.col("r").alias("rank"))
 
 
-# Measured-edge-count cap below which transitive closure / seeded
-# reachability runs as ONE vectorized executor task instead of a
-# multi-round distributed loop (path_closure docstring; optimization
-# guide section 8).  ~4M edges is tens of MB; the closure a task must
-# hold is bounded by reachable pairs, which callers above this scale
-# should (and do) handle with the distributed rounds.
+# Measured-edge-count cap below which transitive closure runs as ONE
+# vectorized executor task (_closure_local_df) and seeded reachability
+# walks on the driver (_reach_local, fed by one bounded Arrow fetch)
+# instead of a multi-round distributed loop (path_closure docstring;
+# optimization guide section 8).  ~4M edges is tens of MB; the closure a
+# task must hold is bounded by reachable pairs, which callers above this
+# scale should (and do) handle with the distributed rounds.
 import os as _os
 
 _TC_LOCAL_MAX_EDGES = int(_os.environ.get("KGFORGE_TC_LOCAL_MAX_EDGES", "4000000"))
@@ -278,50 +279,34 @@ def _closure_local_df(edges: DataFrame, max_rounds: int) -> DataFrame:
     return edges.coalesce(1).mapInPandas(gen, schema="s string, o string")
 
 
-def _reach_local_df(
-    edges: DataFrame, seed: str, forward: bool, max_rounds: int
-) -> DataFrame:
-    """Single-task seeded reachability (>= 1 edge) over a measured-small
-    edge relation: plain frontier BFS on a NumPy CSR adjacency.  Returns
-    the one-column frame of reached nodes ('o' for forward walks, 's'
-    for backward), matching the distributed seeded loop's shape."""
-    out_col = "o" if forward else "s"
+def _reach_local(edges, seed: str, forward: bool, hops: int) -> list:
+    """Seeded reachability (>= 1 edge, at most ``hops`` edges) over an
+    Arrow (s, o) edge table already on the driver: frontier BFS on a NumPy
+    CSR adjacency.  Returns the reached node values."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        df = pd.concat(parts, ignore_index=True)
-        s = df["s"].to_numpy()
-        o = df["o"].to_numpy()
-        if not forward:
-            s, o = o, s
-        nodes, inv = np.unique(np.concatenate([s, o]), return_inverse=True)
-        n = len(nodes)
-        si = inv[: len(s)].astype(np.int64)
-        oi = inv[len(s):].astype(np.int64)
-        pos = np.searchsorted(nodes, seed)
-        if pos >= n or nodes[pos] != seed:
-            return
-        indptr, tgt = _adj_arrays(si, oi, n)
-        visited = np.zeros(n, dtype=bool)
-        frontier = np.unique(tgt[indptr[pos] : indptr[pos + 1]])
+    s, o = (edges.column(c).combine_chunks() for c in ("s", "o"))
+    if not forward:
+        s, o = o, s
+    enc = pa.concat_arrays([s, o]).dictionary_encode()
+    nodes, idx = enc.dictionary, enc.indices.to_numpy().astype(np.int64)
+    pos = pc.index(nodes, seed).as_py()
+    if pos < 0:
+        return []
+    indptr, tgt = _adj_arrays(idx[: len(s)], idx[len(s):], len(nodes))
+    visited = np.zeros(len(nodes), dtype=bool)
+    frontier = np.unique(tgt[indptr[pos] : indptr[pos + 1]])
+    visited[frontier] = True
+    for _ in range(hops - 1):
+        if not frontier.size:
+            break
+        _, nxt = _expand_frontier(indptr, tgt, frontier)
+        nxt = np.unique(nxt)
+        frontier = nxt[~visited[nxt]]
         visited[frontier] = True
-        hops_left = (1 << min(int(max_rounds), 62)) - 1
-        while hops_left > 0 and frontier.size:
-            hops_left -= 1
-            _, nxt = _expand_frontier(indptr, tgt, frontier)
-            nxt = np.unique(nxt)
-            frontier = nxt[~visited[nxt]]
-            visited[frontier] = True
-        reached = np.nonzero(visited)[0]
-        for i0 in range(0, len(reached), 500_000):
-            yield pd.DataFrame({out_col: nodes[reached[i0 : i0 + 500_000]]})
-
-    return edges.coalesce(1).mapInPandas(gen, schema=f"{out_col} string")
+    return nodes.take(pa.array(np.nonzero(visited)[0])).to_pylist()
 
 
 def path_compose(
@@ -434,11 +419,14 @@ def path_closure(
     the path is a known constant (``src``/``dst``), the all-pairs closure
     is the wrong plan — it computes |V|^2-bounded reachability and throws
     almost all of it away.  Those calls route to a SEEDED FRONTIER BFS
-    (semi-naive: frontier equi-joins the edge list each round, newly
-    reached nodes only), whose total work is proportional to the seed's
-    REACHABLE SET, not the graph.  Output is identical to filtering the
-    full closure on the constant (including the '*' identity arm, emitted
-    only when the constant appears as a term of the graph).
+    (_path_closure_seeded: newly reached nodes only), whose total work is
+    proportional to the seed's REACHABLE SET, not the graph.  Up to the
+    same cap it is ONE bounded Arrow fetch of the edge list and a
+    driver-side BFS whose reached nodes return as a local frame; past the
+    cap the frontier equi-joins the edge list each round.  Output is
+    identical to filtering the full closure on the constant (including
+    the '*' identity arm, emitted only when the constant appears as a
+    term of the graph).
     """
     inv = pred.startswith("^")
     base_pred = pred[1:] if inv else pred
@@ -540,59 +528,66 @@ def _path_closure_seeded(
     max_rounds: int = 20,
 ) -> DataFrame:
     """Seeded reachability for ground-endpoint 'p+'/'p*' (path_closure
-    docstring, round 7).  A measured-small edge relation (<=
-    KGFORGE_TC_LOCAL_MAX_EDGES after DISTINCT) runs as ONE vectorized BFS
-    task (_reach_local_df — the whole reachable-set walk in NumPy);
-    bigger graphs run the distributed semi-naive loop: per round the
-    frontier equi-joins the (localCheckpointed) edge list, DISTINCT,
-    anti-join against the seen set (newly reached nodes only —
-    guarantees termination on cycles), localCheckpoint, one count
-    action.  Rounds = seed eccentricity; work per round is
-    frontier-sized.  The full pair closure is NEVER built."""
+    docstring).  ONE bounded fetch, ``edges.limit(cap + 1).toArrow()``,
+    both measures the DISTINCT edge relation and returns it: up to
+    _TC_LOCAL_MAX_EDGES edges the reachable set is walked on the driver
+    (_reach_local) and handed back as a local frame, so the query plan
+    reads a LocalTableScan and no Python worker runs.  Bigger graphs run
+    the distributed semi-naive loop: per round the frontier equi-joins the
+    (localCheckpointed) edge list, DISTINCT, anti-join against the seen
+    set (newly reached nodes only -- guarantees termination on cycles),
+    localCheckpoint, one count action.  Rounds = seed eccentricity / 4;
+    work per round is frontier-sized.  Both routes stop at 2^max_rounds
+    hops, as the all-pairs closure does.  The full pair closure is NEVER
+    built."""
     edges = (
         triples.filter(F.col(pred_col) == base_pred)
         .select(F.col(s_col).alias("s"), F.col(o_col).alias("o"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     seed = dst if dst is not None else src
     fwd = dst is None  # seed on the subject side: walk s -> o
     node = "o" if fwd else "s"
-    n_edges = edges.count()
-
-    def _hop(cur: DataFrame) -> DataFrame:
-        if fwd:
-            return (
-                edges.join(cur.select(F.col("o").alias("s")), "s")
-                .select("o").distinct()
-            )
-        return (
-            edges.join(cur.select(F.col("s").alias("o")), "o")
-            .select("s").distinct()
-        )
-
-    if 0 < n_edges <= _TC_LOCAL_MAX_EDGES:
-        reach = _reach_local_df(edges, seed, fwd, max_rounds)
+    max_hops = 1 << min(int(max_rounds), 62)
+    fetched = edges.limit(_TC_LOCAL_MAX_EDGES + 1).toArrow()
+    if fetched.num_rows <= _TC_LOCAL_MAX_EDGES:
+        reached = _reach_local(fetched, seed, fwd, max_hops)
+        reach = local_frame(triples.sparkSession, ((v,) for v in reached), f"{node} string")
     else:
+        edges = edges.localCheckpoint(eager=True)
+
+        def _hop(cur: DataFrame) -> DataFrame:
+            if fwd:
+                return (
+                    edges.join(cur.select(F.col("o").alias("s")), "s")
+                    .select("o").distinct()
+                )
+            return (
+                edges.join(cur.select(F.col("s").alias("o")), "o")
+                .select("s").distinct()
+            )
+
         if fwd:
             frontier = edges.filter(F.col("s") == seed).select("o").distinct()
         else:
             frontier = edges.filter(F.col("o") == seed).select("s").distinct()
         frontier = frontier.localCheckpoint(eager=True)
-        # each round advances HOPS levels inside one job (per-hop DISTINCT
-        # bounds intermediates by the node set) and pays exactly one count
-        # action + one checkpoint; the seen set is the lazy union of the
-        # already-materialized frontier checkpoints, never re-materialized
-        hops = 4
+        # each round advances up to HOPS levels inside one job (per-hop
+        # DISTINCT bounds intermediates by the node set) and pays exactly
+        # one count action + one checkpoint; the seen set is the lazy
+        # union of the already-materialized frontier checkpoints, never
+        # re-materialized.  The last round is trimmed to the hops left
+        hops, hops_left = 4, max_hops - 1
         frontiers = [frontier] if frontier.count() > 0 else []
-        while frontiers:
+        while frontiers and hops_left > 0:
             seen = frontiers[0]
             for f_ in frontiers[1:]:
                 seen = seen.unionByName(f_)
             delta, found = frontiers[-1], None
-            for _ in range(hops):
+            for _ in range(min(hops, hops_left)):
                 delta = _hop(delta)
                 found = delta if found is None else found.unionByName(delta)
+            hops_left -= hops
             frontier = (
                 found.distinct()
                 .join(seen, node, "left_anti")

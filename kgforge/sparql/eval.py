@@ -714,8 +714,11 @@ def answer_sparql(
 ) -> DataFrame:
     """Parse a SPARQL query string and answer it over the triple table as
     ONE parameterized ``spark.sql`` statement (see the module docstring):
-    no Spark job runs while the plan is built, except the exact closure's
-    own size measurement (graph.path_closure).  The evaluable subset:
+    no Spark job runs while the plan is built, except inside the exact
+    closure (graph.path_closure): a ground-endpoint 'p+'/'p*' fetches its
+    edge list once (one bounded Arrow fetch, walked on the driver and
+    returned as a local frame), the all-pairs closure measures and
+    materializes its edge list.  The evaluable subset:
 
       * forms: SELECT [DISTINCT], ASK (one (ask: boolean) row),
         CONSTRUCT (templates incl. deterministic fresh bnodes, 'CONSTRUCT

@@ -1,7 +1,7 @@
-"""bench_tools/ab.py: seed lists and the per-metric claim rule (wins in
+"""bench_tools/ab.py: seed lists, the per-metric claim rule (wins in
 at least 9 of 10 pairs run, ties counting for neither, a median gain
 larger than the base's interquartile range, and no more failed runs than
-the base)."""
+the base) and the no-regression verdict under a metric's bound."""
 
 import os
 import sys
@@ -64,3 +64,36 @@ def test_failed_change_runs_count_as_losses():
     assert m["wins"] == 9 and not m["claim"]
     pairs[5]["base"]["correct"] = False
     assert ab.compare(pairs, {"read_s_p50": "lower"})["read_s_p50"]["claim"]
+
+
+def test_no_regression_verdict():
+    base = [0.30, 0.31, 0.29, 0.32, 0.30, 0.31, 0.33, 0.30, 0.29, 0.31]
+    bound = {"read_s_p50": 0.25}
+
+    def v(change, b=base, name="read_s_p50", better="lower"):
+        m = ab.compare(_pairs(b, change, name), {name: better}, {name: 0.25})[name]
+        return m["verdict"]
+
+    # tight base spread: a 10% slowdown is within the 25% bound, 40% is not
+    assert v([x * 1.10 for x in base]) == "within bound"
+    assert v([x * 1.40 for x in base]) == "worse"
+    assert v([x * 0.80 for x in base]) == "within bound"
+
+    # the base's IQR (0.2 -> 0.6 around 0.4) is wider than the bound: a
+    # small shift cannot be told from noise ...
+    wide = [0.2, 0.6, 0.3, 0.5, 0.4, 0.2, 0.6, 0.4, 0.3, 0.5]
+    assert v([x * 1.05 for x in wide], wide) == "unresolved"
+    assert v([x * 0.90 for x in wide], wide) == "unresolved"
+    # ... unless every change run beats every base run
+    assert v([0.15] * 10, wide) == "within bound"
+    # a median shift past the bound is 'worse' whatever the spread
+    assert v([x * 1.5 for x in wide], wide) == "worse"
+
+    # 'higher is better' flips the direction of the shift
+    assert v([70] * 10, [100] * 10, "rows_per_s", "higher") == "worse"
+    assert v([130] * 10, [100] * 10, "rows_per_s", "higher") == "within bound"
+
+    # the verdict sits next to the claim, only for metrics with a bound
+    m = ab.compare(_pairs(base, base), {"read_s_p50": "lower"}, bound)["read_s_p50"]
+    assert m["verdict"] == "within bound" and not m["claim"]
+    assert "verdict" not in ab.compare(_pairs(base, base), {"read_s_p50": "lower"})["read_s_p50"]

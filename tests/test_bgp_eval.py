@@ -971,10 +971,11 @@ def test_zeroone_ground_endpoint_identity(t):
 
 
 def test_closure_distributed_path_matches_local(spark, monkeypatch):
-    # round 7: small edge lists take the single-task NumPy kernel; force
-    # the distributed paths (doubling for var-var, frontier loop for
-    # seeded) by zeroing the local cap and assert identical results on a
-    # graph with a chain, a cycle, and an off-predicate edge
+    # round 7: small edge lists take the local routes (all-pairs: one
+    # NumPy task; seeded: a driver-side BFS); force the distributed paths
+    # (doubling for var-var, frontier loop for seeded) by zeroing the
+    # local cap and assert identical results on a graph with a chain, a
+    # cycle, and an off-predicate edge
     import kgforge.operators.graph as G
 
     rows = [(str(i), "n", str(i + 1)) for i in range(1, 7)]
@@ -995,3 +996,96 @@ def test_closure_distributed_path_matches_local(spark, monkeypatch):
     # the '*' identity pair for the (present-in-graph) constant
     assert ("4", "n*", "4") in dist_seed
     assert ("1", "n*", "4") in dist_seed
+
+
+# a chain 1..7, a cycle 10 -> 11 -> 12 -> 10 hanging off it, and an
+# off-predicate edge; '7' occurs only as an object
+SEEDED_ROWS = (
+    [(str(i), "n", str(i + 1)) for i in range(1, 7)]
+    + [("3", "n", "10"), ("10", "n", "11"), ("11", "n", "12"), ("12", "n", "10")]
+    + [("a", "o", "b")]
+)
+SEEDED_CASES = [
+    ("n", dict(src="1")),  # forward
+    ("n", dict(dst="4")),  # backward
+    ("^n", dict(src="4")),
+    ("^n", dict(dst="1")),
+    ("n", dict(src="zz", include_zero=True)),  # seed absent from the graph
+    ("n", dict(src="7", include_zero=True)),  # seed only an object
+    ("n", dict(src="1", dst="5")),  # both endpoints ground
+    ("n", dict(src="5", dst="1")),
+    ("n", dict(src="3", dst="3", include_zero=True)),
+    ("n", dict(src="10")),  # a cycle through the seed
+    ("n", dict(dst="10", include_zero=True)),
+    ("none", dict(src="1", include_zero=True)),  # a predicate with no edges
+]
+
+
+def _pairs(df):
+    return sorted((r[0], r[2]) for r in df.collect())
+
+
+def test_seeded_closure_routes_agree(spark, monkeypatch):
+    # the driver-side BFS (default cap) and the distributed frontier loop
+    # (cap 0) give the same rows, and both equal the all-pairs closure
+    # filtered on the constant endpoint(s)
+    import kgforge.operators.graph as G
+
+    t = spark.createDataFrame(SEEDED_ROWS, "subj string, pred string, obj string")
+    full = {
+        (p, z): _pairs(path_closure(t, p, include_zero=z))
+        for p in ("n", "^n", "none") for z in (False, True)
+    }
+    local = [_pairs(path_closure(t, p, **kw)) for p, kw in SEEDED_CASES]
+    monkeypatch.setattr(G, "_TC_LOCAL_MAX_EDGES", 0)
+    dist = [_pairs(path_closure(t, p, **kw)) for p, kw in SEEDED_CASES]
+    for (p, kw), lo, di in zip(SEEDED_CASES, local, dist):
+        want = [
+            (s, o) for s, o in full[p, kw.get("include_zero", False)]
+            if kw.get("src", s) == s and kw.get("dst", o) == o
+        ]
+        assert lo == di == want, (p, kw)
+    assert local[0] == [("1", o) for o in "10 11 12 2 3 4 5 6 7".split()]
+    assert local[4] == [] and local[5] == [("7", "7")]
+    assert local[9] == [("10", "10"), ("10", "11"), ("10", "12")]
+
+
+def test_seeded_closure_cap_boundary(spark, monkeypatch):
+    # the cap counts DISTINCT edges: cap = n_edges walks on the driver,
+    # cap = n_edges - 1 runs the distributed loop; same rows either way
+    import kgforge.operators.graph as G
+
+    t = spark.createDataFrame(SEEDED_ROWS + SEEDED_ROWS[:2], "subj string, pred string, obj string")
+    n_edges = len({(s, o) for s, p, o in SEEDED_ROWS if p == "n"})
+    walks = []
+    reach_local = G._reach_local
+    monkeypatch.setattr(G, "_reach_local", lambda *a: walks.append(1) or reach_local(*a))
+    got = {}
+    for cap in (n_edges, n_edges - 1):
+        monkeypatch.setattr(G, "_TC_LOCAL_MAX_EDGES", cap)
+        walks.clear()
+        got[cap] = _pairs(path_closure(t, "n", src="2"))
+        assert bool(walks) == (cap == n_edges), cap
+    assert got[n_edges] == got[n_edges - 1]
+    assert [o for _, o in got[n_edges]] == "10 11 12 3 4 5 6 7".split()
+
+
+@pytest.mark.parametrize("max_rounds", [1, 2, 3])
+def test_seeded_closure_honours_max_rounds(spark, monkeypatch, max_rounds):
+    # both seeded routes stop at 2^max_rounds hops, as the all-pairs
+    # routes do (max_rounds=3: one hop, a 4-hop round, a trimmed 3-hop one)
+    import kgforge.operators.graph as G
+
+    rows = [(str(i), "n", str(i + 1)) for i in range(1, 12)]
+    t = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    hops = 2 ** max_rounds
+    fwd_want = [str(i) for i in range(2, 2 + hops)]
+    bwd_want = [str(i) for i in range(12 - hops, 12)]
+    all_pairs = _pairs(path_closure(t, "n", max_rounds=max_rounds))
+    assert sorted(o for s, o in all_pairs if s == "1") == sorted(fwd_want)
+    for cap in (G._TC_LOCAL_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "_TC_LOCAL_MAX_EDGES", cap)
+        fwd = _pairs(path_closure(t, "n", src="1", max_rounds=max_rounds))
+        bwd = _pairs(path_closure(t, "n", dst="12", max_rounds=max_rounds))
+        assert [o for _, o in fwd] == sorted(fwd_want), cap
+        assert [s for s, _ in bwd] == sorted(bwd_want), cap

@@ -9,8 +9,10 @@
 * structure: for the serve-shaped templates and the OPTIONAL / MINUS /
   EXISTS / VALUES / GROUP BY shapes, building the plan calls
   ``SparkSession.sql`` exactly once, reads no ``DataFrame.columns`` and
-  launches no Spark job (the exact closure's own size measurement in
-  graph.path_closure is the one exception).
+  launches no Spark job.  The one exception is the ground-endpoint
+  closure (graph.path_closure): one bounded Arrow fetch of its edge list,
+  walked on the driver, so its plan is a LocalTableScan with no Python
+  worker.
 """
 
 import re
@@ -18,6 +20,7 @@ import time
 
 import pytest
 
+from kgforge.plans.inspect import physical_plan
 from kgforge.sparql.eval import answer_sparql, eval_bgp, eval_bgp_delta
 
 # each would break a statement that spliced it: an unbalanced quote, an
@@ -200,13 +203,19 @@ def test_one_statement_no_columns_no_jobs(spark, statements, monkeypatch):
             assert tracker.getJobIdsForGroup(f"barrier-{name}"), name
             assert len(statements) - before == 1, name
             jobs = tracker.getJobIdsForGroup(f"plan-{name}")
+            assert not reads, name
             if name == "closure":
-                # path_closure's own route choice: it measures (and reads
-                # the columns of) its edge list before returning a plan
+                # the seeded closure fetches its edge list (one bounded
+                # Arrow fetch that also measures it) and walks it on the
+                # driver: the reached nodes enter the statement as a local
+                # frame, so no Python worker runs at execution
                 assert jobs
+                plan = physical_plan(df)
+                assert "LocalTableScan" in plan, plan
+                for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+                    assert node not in plan, plan
             else:
-                assert not reads and not jobs, name
-            reads.clear()
+                assert not jobs, name
             df.collect()  # the statement is executable
     finally:
         sc.setJobGroup("", "")
