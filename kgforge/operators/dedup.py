@@ -1138,101 +1138,11 @@ def incremental_simhash_pairs(
     return pairs, new_sigs
 
 
-def _cc_star(
-    pairs: DataFrame, col_a: str, col_b: str, max_iter: int, stats: dict | None
-) -> DataFrame:
-    """Alternating large-star / small-star connected components (the
-    two-phase MapReduce CC algorithm, public literature: Kiveris et al.,
-    'Connected Components in MapReduce and Beyond').  Robust on long-diameter
-    graphs at billions of edges: each phase is one equi-join + min
-    aggregation over the edge list — never a cartesian, never a driver-side
-    frontier — and the edge set contracts toward per-component stars whose
-    center is the component minimum.
-
-      large-star: every node connects its STRICTLY LARGER neighbors to the
-        minimum of its closed neighborhood (computed over the symmetric
-        edge view);
-      small-star: every node connects its smaller-or-equal neighbors (the
-        canonical hi->lo directed view) and itself to that minimum.
-
-    Convergence = edge set fixed under both phases, detected by a
-    (count, xxhash64-XOR) signature on the materialized canonical edges —
-    one cheap aggregate per round, no set-difference join (bit_xor is
-    order-insensitive and cannot overflow under ANSI arithmetic)."""
-    F_hi, F_lo = F.greatest, F.least
-    edges = (
-        pairs.select(
-            F_hi(F.col(col_a), F.col(col_b)).alias("hi"),
-            F_lo(F.col(col_a), F.col(col_b)).alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = edges.select(F.col("hi").alias("id")).unionByName(
-        edges.select(F.col("lo").alias("id"))
-    ).distinct()
-
-    def signature(e: DataFrame):
-        row = e.agg(
-            F.count("*").alias("n"), F.bit_xor(F.xxhash64("hi", "lo")).alias("h")
-        ).head()
-        return (row.n, row.h)
-
-    sig = signature(edges)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # large-star over the symmetric view: (u, v) with v > u reroutes v
-        # to m(u) = min(closed neighborhood of u)
-        sym = edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-            edges.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        m = F_lo(F.col("mn"), F.col("u"))
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("hi"), m.alias("lo"))
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        # small-star over the canonical hi->lo view: every hi links its
-        # smaller neighbors and itself to min(N(hi) ∪ {hi}) = min(lo)
-        mins_s = large.groupBy("hi").agg(F.min("lo").alias("mn"))
-        small = (
-            large.join(mins_s, "hi")
-            .select(F.col("lo").alias("x"), F.col("mn").alias("m"))
-            .unionByName(mins_s.select(F.col("hi").alias("x"), F.col("mn").alias("m")))
-            .select(
-                F_hi(F.col("x"), F.col("m")).alias("hi"),
-                F_lo(F.col("x"), F.col("m")).alias("lo"),
-            )
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-            .localCheckpoint()
-        )
-        new_sig = signature(small)
-        edges = small
-        if new_sig == sig:
-            break
-        sig = new_sig
-    if stats is not None:
-        stats["rounds"] = rounds
-    # converged: per-component star with center = component minimum; a
-    # vertex with no outgoing hi-edge is its own center
-    centers = edges.groupBy("hi").agg(F.min("lo").alias("comp"))
-    return verts.join(
-        centers.withColumnRenamed("hi", "id"), "id", "left"
-    ).select("id", F.coalesce("comp", F.col("id")).alias("component"))
-
-
 def connected_components(
     pairs: DataFrame,
     col_a: str = "a",
     col_b: str = "b",
     max_iter: int = 20,
-    method: str = "jump",
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, component) for every vertex appearing in ``pairs``; component =
@@ -1251,18 +1161,13 @@ def connected_components(
     each round: lineage stays constant-depth, and the convergence check
     (any label changed?) costs one short-circuit count on materialized
     data.  Near-dup clusters are clique-ish (diameter 1-3) so 2-3 rounds
-    are typical; a 60-vertex chain converges in ~6.
+    are typical; a 200-vertex chain converges in 8.  Never a cartesian,
+    never a driver-side frontier.
 
-    For adversarial graphs (long paths at billions of edges) pass
-    ``method='star'``: the alternating large-star/small-star variant
-    (implemented round 4 in ``_cc_star``) with the same equi-join + agg
-    shape — never a cartesian, never a driver-side frontier — and the same
-    (id, component=min member) output contract.  ``stats`` (optional dict)
-    receives {'rounds': n} for either method."""
-    if method == "star":
-        return _cc_star(pairs, col_a, col_b, max_iter, stats)
-    if method != "jump":
-        raise ValueError(f"unknown connected-components method {method!r}")
+    ``stats`` (optional dict) receives {'rounds': n, 'converged': bool};
+    converged is False when ``max_iter`` rounds ran out before the labels
+    reached their fixpoint, in which case a component may still be split
+    under more than one label."""
     edges = (
         # both edge directions from ONE scan of the pair relation (round
         # 7): the two-branch union re-ran the pair lineage per direction
@@ -1279,7 +1184,7 @@ def connected_components(
         .localCheckpoint()  # scanned every round: materialize once
     )
     labels = edges.select("src").distinct().withColumn("comp", F.col("src"))
-    rounds = 0
+    rounds, converged = 0, False
     for _ in range(max_iter):
         rounds += 1
         nbr_min = (
@@ -1312,9 +1217,11 @@ def connected_components(
         changed = jumped.filter("_changed").limit(1).count()
         labels = jumped.drop("_changed")
         if changed == 0:
+            converged = True
             break
     if stats is not None:
         stats["rounds"] = rounds
+        stats["converged"] = converged
     return labels.select(F.col("src").alias("id"), F.col("comp").alias("component"))
 
 

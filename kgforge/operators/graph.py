@@ -12,6 +12,7 @@ inside the loop.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from kgforge.frames import local_frame
@@ -68,7 +69,15 @@ def pagerank(
     caller before cross-engine comparison (floating sums differ at the last
     ulp between engines).
 
-    Scale shape per iteration — the PageRank-inherent single shuffle:
+    Scale shape — two routes on the MEASURED distinct edge count.  ONE
+    bounded fetch, ``e.limit(cap + 1).toArrow()``, both measures the
+    distinct edge list and hands it to the driver (the same fetch as the
+    seeded closure).  Up to _LOCAL_MAX_EDGES edges the power iteration
+    runs there on dictionary-encoded ids (_pagerank_local: out-degrees and
+    per-iteration contributions are ``np.bincount`` passes) and the ranks
+    return as a local frame — no per-iteration jobs, which dominate wall
+    for dictionary-sized graphs.  Past the cap, per iteration, the
+    PageRank-inherent single shuffle:
       * contributions: ranks equi-join edges on src (both sides keyed on
         the 8-byte node id; the edge relation is the big side and keeps a
         stable partitioning across iterations, so only the rank side —
@@ -80,20 +89,28 @@ def pagerank(
       * lineage: every `checkpoint_every` iterations the rank relation is
         localCheckpoint-ed, keeping the plan depth bounded for long runs
         (same discipline as the connected-components loop in dedup.py).
+    Same update rule and float64 both ways; only the double SUMMATION
+    ORDER differs, as it already does between Spark's own partition
+    orders, which is why callers round before cross-engine comparison.
 
-    Returns (node, rank) with SUM(rank) == 1 up to float error.
+    Returns (node, rank) with SUM(rank) == 1 up to float error; node keeps
+    the input's id type, and an empty edge list gives an empty frame.
     """
+    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    # one id type for both endpoints, so the driver route can encode them
+    # over one dictionary
+    id_type = e.select(F.array("src", "dst")).schema[0].dataType.elementType
+    e = e.select(F.col("src").cast(id_type), F.col("dst").cast(id_type)).distinct()
+    fetched = e.limit(_LOCAL_MAX_EDGES + 1).toArrow()
+    if fetched.num_rows <= _LOCAL_MAX_EDGES:
+        return _pagerank_local(e.sparkSession, fetched, id_type, iters, damping)
     # The loop-invariant relations (edges, nodes, degrees) are referenced
     # 2-3x PER ITERATION by the unrolled lineage; without materialization
     # Spark recomputes the edge derivation (often a multi-way join upstream)
     # ~3 * iters times.  localCheckpoint materializes each once and
     # truncates lineage — the standard iterative-graph discipline (GraphX
     # does the same); the cost is one persisted copy of the edge list.
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = e.localCheckpoint(eager=True)
     nodes = (
         # one scan of the checkpointed edge list (round 7), not a
         # two-branch union scanning it twice; same distinct id set
@@ -107,21 +124,6 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()  # one scalar, loop-invariant — fine on the driver
-    if n == 0:  # empty edge set: an empty (node, rank) frame, not a crash
-        return nodes.select(F.col("id").alias("node"), F.lit(0.0).alias("rank"))
-    # Round 7 (guide §8, the _TC_LOCAL_MAX_EDGES discipline): a MEASURED
-    # tiny graph — the distinct edge list is already materialized, so the
-    # count is free — iterates on the driver in one NumPy pass instead of
-    # paying iters x (join + agg + crossJoin) tiny distributed jobs, which
-    # dominate wall for dictionary-sized graphs (the 25-node nation graph
-    # behind kg_pagerank: ~2-3 s of pure job scheduling).  Same update
-    # rule, float64 both ways; double SUMMATION ORDER differs (np.add.at
-    # vs Spark partial aggs) exactly as it already differs run-to-run
-    # between Spark's own partition orders, which is why the operator's
-    # contract has callers round before cross-engine comparison.  Past the
-    # cap the distributed loop is unchanged.
-    if e.count() <= _PR_LOCAL_MAX_EDGES:
-        return _pagerank_local_df(e, nodes, deg, n, iters, damping)
     ranks = nodes.select("id", (F.lit(1.0) / n).alias("r"))
     for it in range(iters):
         with_deg = ranks.join(deg, "id", "left")
@@ -155,56 +157,50 @@ def pagerank(
     return ranks.select(F.col("id").alias("node"), F.col("r").alias("rank"))
 
 
-# Measured-edge-count cap below which transitive closure runs as ONE
-# vectorized executor task (_closure_local_df) and seeded reachability
-# walks on the driver (_reach_local, fed by one bounded Arrow fetch)
-# instead of a multi-round distributed loop (path_closure docstring;
-# optimization guide section 8).  ~4M edges is tens of MB; the closure a
-# task must hold is bounded by reachable pairs, which callers above this
-# scale should (and do) handle with the distributed rounds.
-import os as _os
-
-_TC_LOCAL_MAX_EDGES = int(_os.environ.get("KGFORGE_TC_LOCAL_MAX_EDGES", "4000000"))
-
-# Measured-edge-count cap below which PageRank iterates on the driver
-# (bounded collect: <= cap edge pairs + the node/degree vectors).  500k
-# edges is a few MB of driver state; past it the distributed loop runs.
-_PR_LOCAL_MAX_EDGES = int(_os.environ.get("KGFORGE_PR_LOCAL_MAX_EDGES", "500000"))
+# Measured distinct-edge-count cap below which a graph kernel runs on the
+# driver or in one task instead of a multi-round distributed loop
+# (optimization guide section 8): PageRank iterates on the driver
+# (_pagerank_local) and seeded reachability walks there (_reach_local),
+# each fed by one bounded Arrow fetch, and the all-pairs closure runs as
+# ONE vectorized executor task (_closure_local_df).  ~4M edges is tens of
+# MB; the closure a task must hold is bounded by reachable pairs, which
+# callers above this scale should (and do) handle with the distributed
+# rounds.
+_LOCAL_MAX_EDGES = 4_000_000
 
 
-def _pagerank_local_df(e, nodes, deg, n: int, iters: int, damping: float):
-    """Driver-side power iteration over a measured-tiny materialized graph.
-    Inputs are the SAME checkpointed relations the distributed loop uses;
-    the update rule is identical (uniform teleport + dangling-mass
-    redistribution), so the fixpoint matches up to double summation order
-    (see caller comment).  Output schema matches the distributed path:
-    (node <input id type>, rank double)."""
+def _encode(edges, a: str, b: str):
+    """Dictionary-encode an Arrow edge table's ``a`` and ``b`` id columns
+    (long or string ids, null a value like any other) over ONE shared
+    dictionary: (distinct ids, a positions, b positions), positions as
+    int64 NumPy arrays indexing the ids."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    spark = e.sparkSession
-    ids = [r[0] for r in nodes.collect()]
-    pos = {v: i for i, v in enumerate(ids)}
-    er = e.collect()
-    src = np.fromiter((pos[r[0]] for r in er), dtype=np.int64, count=len(er))
-    dst = np.fromiter((pos[r[1]] for r in er), dtype=np.int64, count=len(er))
-    degv = np.zeros(n, dtype=np.float64)
-    for r in deg.collect():
-        degv[pos[r[0]]] = r[1]
-    dangling = degv == 0.0
-    r_vec = np.full(n, 1.0 / n, dtype=np.float64)
+    x, y = (edges.column(c).combine_chunks() for c in (a, b))
+    enc = pa.concat_arrays([x, y]).dictionary_encode(null_encoding="encode")
+    idx = enc.indices.to_numpy().astype(np.int64)
+    return enc.dictionary, idx[: len(x)], idx[len(x):]
+
+
+def _pagerank_local(spark, edges, id_type, iters: int, damping: float):
+    """Driver-side power iteration over a measured-small Arrow (src, dst)
+    edge table (pagerank docstring): the distributed loop's update rule on
+    dictionary-encoded ids, ranks returned as a local frame of
+    (node <id_type>, rank double)."""
+    import numpy as np
+
+    schema = f"node {id_type.simpleString()}, rank double"
+    nodes, src, dst = _encode(edges, "src", "dst")
+    n = len(nodes)
+    if n == 0:  # empty edge set: an empty (node, rank) frame, not a crash
+        return local_frame(spark, [], schema)
+    deg = np.bincount(src, minlength=n).astype(np.float64)
+    dangling = deg == 0.0
+    r = np.full(n, 1.0 / n)
     for _ in range(iters):
-        w = np.zeros(n, dtype=np.float64)
-        np.add.at(w, dst, r_vec[src] / degv[src])
-        dm = float(r_vec[dangling].sum())
-        r_vec = (1.0 - damping) / n + damping * (w + dm / n)
-    schema = StructType(
-        [
-            StructField("node", nodes.schema.fields[0].dataType, True),
-            StructField("rank", DoubleType(), True),
-        ]
-    )
-    return local_frame(spark, zip(ids, r_vec.tolist()), schema)
+        w = np.bincount(dst, weights=r[src] / deg[src], minlength=n)
+        r = (1.0 - damping) / n + damping * (w + r[dangling].sum() / n)
+    return local_frame(spark, pa.table([nodes, r], names=["node", "rank"]), schema)
 
 
 def _adj_arrays(src, dst, n):
@@ -279,23 +275,18 @@ def _closure_local_df(edges: DataFrame, max_rounds: int) -> DataFrame:
     return edges.coalesce(1).mapInPandas(gen, schema="s string, o string")
 
 
-def _reach_local(edges, seed: str, forward: bool, hops: int) -> list:
+def _reach_local(edges, seed: str, forward: bool, hops: int):
     """Seeded reachability (>= 1 edge, at most ``hops`` edges) over an
     Arrow (s, o) edge table already on the driver: frontier BFS on a NumPy
-    CSR adjacency.  Returns the reached node values."""
+    CSR adjacency.  Returns the reached node values as an Arrow array."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    s, o = (edges.column(c).combine_chunks() for c in ("s", "o"))
-    if not forward:
-        s, o = o, s
-    enc = pa.concat_arrays([s, o]).dictionary_encode()
-    nodes, idx = enc.dictionary, enc.indices.to_numpy().astype(np.int64)
+    nodes, s, o = _encode(edges, *(("s", "o") if forward else ("o", "s")))
     pos = pc.index(nodes, seed).as_py()
     if pos < 0:
-        return []
-    indptr, tgt = _adj_arrays(idx[: len(s)], idx[len(s):], len(nodes))
+        return nodes.slice(0, 0)
+    indptr, tgt = _adj_arrays(s, o, len(nodes))
     visited = np.zeros(len(nodes), dtype=bool)
     frontier = np.unique(tgt[indptr[pos] : indptr[pos + 1]])
     visited[frontier] = True
@@ -306,7 +297,7 @@ def _reach_local(edges, seed: str, forward: bool, hops: int) -> list:
         nxt = np.unique(nxt)
         frontier = nxt[~visited[nxt]]
         visited[frontier] = True
-    return nodes.take(pa.array(np.nonzero(visited)[0])).to_pylist()
+    return nodes.take(pa.array(np.nonzero(visited)[0]))
 
 
 def path_compose(
@@ -398,7 +389,7 @@ def path_closure(
     traverses inverse edges, as in path_compose.
 
     Scale shape — two routes on the MEASURED distinct edge count.  Up to
-    KGFORGE_TC_LOCAL_MAX_EDGES (default 4M) the closure runs in ONE
+    _LOCAL_MAX_EDGES (4M) the closure runs in ONE
     executor task as a vectorized NumPy kernel (_closure_local_df).  Past
     the cap it runs DELTA-DOUBLING, not naive expansion: with R_1 = E and
     R_{i+1} = R_i UNION (R_i JOIN delta_i), where delta_i holds the pairs
@@ -443,7 +434,7 @@ def path_closure(
         .localCheckpoint(eager=True)
     )
     n = reach.count()
-    if 0 < n <= _TC_LOCAL_MAX_EDGES:
+    if 0 < n <= _LOCAL_MAX_EDGES:
         # measured-small edge relation: compute the closure in ONE task
         # (round 7, optimization guide section 8 — use problem knowledge
         # the optimizer lacks).  Transitive closure is shuffle-round-bound
@@ -453,9 +444,9 @@ def path_closure(
         # tiny in bytes; below the cap the whole edge list fits one
         # executor task, which runs the vectorized NumPy kernel and
         # streams the pair closure back as Arrow batches.  The cap is the
-        # MEASURED post-distinct edge count (env
-        # KGFORGE_TC_LOCAL_MAX_EDGES, default 4M ~ tens of MB of edges);
-        # bigger graphs keep the distributed doubling below.  Both paths
+        # MEASURED post-distinct edge count (_LOCAL_MAX_EDGES, 4M ~ tens
+        # of MB of edges); bigger graphs keep the distributed doubling
+        # below.  Both paths
         # honor max_rounds by bounding covered path length at
         # 2^max_rounds, so results are identical.
         reach = _closure_local_df(reach, max_rounds)
@@ -530,7 +521,7 @@ def _path_closure_seeded(
     """Seeded reachability for ground-endpoint 'p+'/'p*' (path_closure
     docstring).  ONE bounded fetch, ``edges.limit(cap + 1).toArrow()``,
     both measures the DISTINCT edge relation and returns it: up to
-    _TC_LOCAL_MAX_EDGES edges the reachable set is walked on the driver
+    _LOCAL_MAX_EDGES edges the reachable set is walked on the driver
     (_reach_local) and handed back as a local frame, so the query plan
     reads a LocalTableScan and no Python worker runs.  Bigger graphs run
     the distributed semi-naive loop: per round the frontier equi-joins the
@@ -549,10 +540,12 @@ def _path_closure_seeded(
     fwd = dst is None  # seed on the subject side: walk s -> o
     node = "o" if fwd else "s"
     max_hops = 1 << min(int(max_rounds), 62)
-    fetched = edges.limit(_TC_LOCAL_MAX_EDGES + 1).toArrow()
-    if fetched.num_rows <= _TC_LOCAL_MAX_EDGES:
+    fetched = edges.limit(_LOCAL_MAX_EDGES + 1).toArrow()
+    if fetched.num_rows <= _LOCAL_MAX_EDGES:
         reached = _reach_local(fetched, seed, fwd, max_hops)
-        reach = local_frame(triples.sparkSession, ((v,) for v in reached), f"{node} string")
+        reach = local_frame(
+            triples.sparkSession, pa.table([reached], names=[node]), f"{node} string"
+        )
     else:
         edges = edges.localCheckpoint(eager=True)
 

@@ -138,15 +138,10 @@ def merge_graph(
     backend documents the weaker contract rather than hiding it."""
     import os
 
-    new_t = new_batch.withColumn("pred_family", _pred_family())
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            _salted_layout(new_t, n_buckets)
-            .write.mode("overwrite")
-            .partitionBy("pred_family")
-            .parquet(path)
-        )
+        write_graph(new_batch, path, n_buckets)
         return
+    new_t = new_batch.withColumn("pred_family", _pred_family())
     # touched namespaces: dict-sized (bounded by distinct predicate
     # namespaces, not data volume) — a legitimate driver-side list
     fams = [r.pred_family for r in new_t.select("pred_family").distinct().collect()]

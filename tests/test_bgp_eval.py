@@ -985,7 +985,7 @@ def test_closure_distributed_path_matches_local(spark, monkeypatch):
     local_seed = sorted(
         map(tuple, path_closure(t, "n", dst="4", include_zero=True).collect())
     )
-    monkeypatch.setattr(G, "_TC_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 0)
     dist_all = sorted(map(tuple, path_closure(t, "n").collect()))
     dist_seed = sorted(
         map(tuple, path_closure(t, "n", dst="4", include_zero=True).collect())
@@ -1037,7 +1037,7 @@ def test_seeded_closure_routes_agree(spark, monkeypatch):
         for p in ("n", "^n", "none") for z in (False, True)
     }
     local = [_pairs(path_closure(t, p, **kw)) for p, kw in SEEDED_CASES]
-    monkeypatch.setattr(G, "_TC_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 0)
     dist = [_pairs(path_closure(t, p, **kw)) for p, kw in SEEDED_CASES]
     for (p, kw), lo, di in zip(SEEDED_CASES, local, dist):
         want = [
@@ -1062,7 +1062,7 @@ def test_seeded_closure_cap_boundary(spark, monkeypatch):
     monkeypatch.setattr(G, "_reach_local", lambda *a: walks.append(1) or reach_local(*a))
     got = {}
     for cap in (n_edges, n_edges - 1):
-        monkeypatch.setattr(G, "_TC_LOCAL_MAX_EDGES", cap)
+        monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", cap)
         walks.clear()
         got[cap] = _pairs(path_closure(t, "n", src="2"))
         assert bool(walks) == (cap == n_edges), cap
@@ -1083,8 +1083,8 @@ def test_seeded_closure_honours_max_rounds(spark, monkeypatch, max_rounds):
     bwd_want = [str(i) for i in range(12 - hops, 12)]
     all_pairs = _pairs(path_closure(t, "n", max_rounds=max_rounds))
     assert sorted(o for s, o in all_pairs if s == "1") == sorted(fwd_want)
-    for cap in (G._TC_LOCAL_MAX_EDGES, 0):
-        monkeypatch.setattr(G, "_TC_LOCAL_MAX_EDGES", cap)
+    for cap in (G._LOCAL_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", cap)
         fwd = _pairs(path_closure(t, "n", src="1", max_rounds=max_rounds))
         bwd = _pairs(path_closure(t, "n", dst="12", max_rounds=max_rounds))
         assert [o for _, o in fwd] == sorted(fwd_want), cap

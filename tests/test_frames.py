@@ -13,6 +13,7 @@ Three gates:
 import ast
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
@@ -95,6 +96,23 @@ def test_rows_may_be_any_iterable(spark):
 def test_ragged_rows_rejected(spark):
     with pytest.raises(ValueError):
         local_frame(spark, [("a", 1.0), ("b",)], "k string, v double")
+
+
+def test_arrow_table_cast_to_schema(spark):
+    # columns match fields by position, not name, and are cast to the
+    # schema's types (large_string -> string, int64 -> int)
+    table = pa.table(
+        [pa.array(["a", None, "c"], pa.large_string()), pa.array([1, 2, None], pa.int64())],
+        names=["x", "y"],
+    )
+    schema = "k string, v int"
+    df = local_frame(spark, table, schema)
+    _assert_local(df)
+    want = spark.createDataFrame([("a", 1), (None, 2), ("c", None)], schema)
+    assert df.schema == want.schema
+    assert df.collect() == want.collect()
+    with pytest.raises(ValueError):
+        local_frame(spark, table, "k string")
 
 
 # ------------------------------------------------------------------ plan gate

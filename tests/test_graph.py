@@ -70,10 +70,13 @@ def test_pagerank_no_python_in_plan(spark):
     assert "EvalPython" not in plan  # pure JVM: no row-Python, no Arrow UDF
 
 
-def test_pagerank_checkpoint_path_same_result(spark):
+def test_pagerank_checkpoint_path_same_result(spark, monkeypatch):
+    # cap 0 forces the distributed loop, so the rank checkpoints do run
+    monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 0)
     e = _edges(spark, PAIRS)
     a = {r.node: r.rank for r in graph.pagerank(e, iters=6, checkpoint_every=2).collect()}
     b = ref_pagerank(PAIRS, iters=6)
+    assert set(a) == set(b)
     for v in b:
         assert a[v] == pytest.approx(b[v], abs=1e-12)
 
@@ -84,11 +87,41 @@ def test_pagerank_distributed_path_matches_local(spark, monkeypatch):
     # agree to double-rounding tolerance on a graph with duplicates,
     # a cycle and a dangling node
     local = {r.node: r.rank for r in graph.pagerank(_edges(spark, PAIRS), iters=5).collect()}
-    monkeypatch.setattr(graph, "_PR_LOCAL_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 0)
     dist = {r.node: r.rank for r in graph.pagerank(_edges(spark, PAIRS), iters=5).collect()}
     assert set(local) == set(dist)
     for v in local:
         assert local[v] == pytest.approx(dist[v], abs=1e-12)
+
+
+@pytest.mark.parametrize("id_type, conv", [("bigint", int), ("string", str)])
+def test_pagerank_cap_boundary(spark, monkeypatch, id_type, conv):
+    # the cap counts DISTINCT edges (PAIRS repeats (1, 2)): cap = n_edges
+    # iterates on the driver, cap = n_edges - 1 runs the distributed loop;
+    # same ranks either way, under the input's id type
+    pairs = [(conv(a), conv(b)) for a, b in PAIRS]
+    e = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
+    n_edges = len(set(pairs))
+    assert n_edges < len(pairs)
+    runs = []
+    local = graph._pagerank_local
+    monkeypatch.setattr(graph, "_pagerank_local", lambda *a: runs.append(1) or local(*a))
+    got = {}
+    for cap in (n_edges, n_edges - 1):
+        monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", cap)
+        runs.clear()
+        df = graph.pagerank(e, iters=5)
+        assert bool(runs) == (cap == n_edges), cap
+        assert df.schema.simpleString() == f"struct<node:{id_type},rank:double>"
+        got[cap] = {r.node: r.rank for r in df.collect()}
+    want = ref_pagerank(pairs, iters=5)
+    assert set(got[n_edges]) == set(got[n_edges - 1]) == set(want)
+    for v in want:
+        assert got[n_edges][v] == pytest.approx(want[v], abs=1e-12)
+        assert got[n_edges - 1][v] == pytest.approx(want[v], abs=1e-12)
+    # an empty edge list gives the empty (node, rank) frame
+    empty = graph.pagerank(spark.createDataFrame([], f"src {id_type}, dst {id_type}"))
+    assert empty.schema == df.schema and empty.collect() == []
 
 
 # -------------------------------------------------------------------- VoID
