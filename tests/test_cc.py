@@ -132,6 +132,22 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         assert _cc(spark, pairs) == _union_find_reference(pairs), f"seed={seed}"
 
 
+def test_star_cc_matches_union_find_on_random_graphs(spark):
+    """Random star (hub-and-spoke) graphs whose hubs share spokes: a spoke
+    must take the min label over every hub it reaches, however many hubs
+    sit between it and the component minimum."""
+    import random
+
+    for seed in (7, 23, 99):
+        rng = random.Random(seed)
+        pairs = []
+        for _ in range(rng.randint(2, 6)):
+            hub = rng.randrange(200)
+            pairs += [(hub, rng.randrange(200)) for _ in range(rng.randint(3, 30))]
+        pairs = [(a, b) for a, b in pairs if a != b]
+        assert _cc(spark, pairs) == _union_find_reference(pairs), f"seed={seed}"
+
+
 def test_cc_on_path_expander_mix(spark):
     """10k-edge adversarial mix: one 2000-node path (long diameter), one
     ~6000-edge expander over 3000 nodes, plus cross links — pointer
@@ -168,3 +184,32 @@ def test_cc_plan_has_no_cartesian(spark):
     df = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
     plan = dedup.connected_components(df, max_iter=1)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_star_cc_plan_has_no_cartesian(spark):
+    """Every query the iteration runs, in every round, on a star (hub 0
+    with 50 spokes, one spoke extended into a short tail): the per-round
+    joins are equi-joins, never a cartesian or a nested-loop join."""
+    pairs = [(0, i) for i in range(1, 51)] + [(50, 60), (60, 61)]
+    store = spark._jsparkSession.sharedState().statusStore()
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest(n):
+        # the store drops its oldest executions past its retention cap, so
+        # read from the tail and select by execution id, not by offset
+        listener_bus.waitUntilEmpty()
+        total = store.executionsCount()
+        it = store.executionsList(max(0, total - n), n).iterator()
+        out = []
+        while it.hasNext():
+            out.append(it.next())
+        return out
+
+    last = max((e.executionId() for e in newest(1)), default=-1)
+    stats: dict = {}
+    comp = _cc(spark, pairs, stats=stats)
+    assert set(comp.values()) == {0} and stats["converged"]
+    plans = [e.physicalPlanDescription() for e in newest(200) if e.executionId() > last]
+    assert sum("SortMergeJoin" in p or "BroadcastHashJoin" in p for p in plans) >= stats["rounds"]
+    for p in plans:
+        assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
